@@ -7,12 +7,13 @@ oracle_sql()  — DuckDB-equivalent SQL per query (driver correctness gate).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ocr_hardsubx_spark.plans import dataset_queries as dq  # noqa: E402
 from ocr_hardsubx_spark.plans import queries as q  # noqa: E402

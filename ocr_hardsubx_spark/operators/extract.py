@@ -11,8 +11,8 @@ two ensemble evaluations per Arrow batch, zero per-row Python UDFs
 (north_star hard requirement; the plan shows MapInPandas, never
 BatchEvalPython — enforced by tests/test_spark_pipeline.py).
 
-Classifier tables ride a SparkContext broadcast (a few KB) and are
-rehydrated into numpy arrays once per executor (reference S2,
+Classifier tables ride one SparkContext broadcast per session (a few KB)
+and are rehydrated into numpy arrays once per executor (reference S2,
 erfilter.c:241-251).
 """
 
@@ -25,6 +25,10 @@ import numpy as np
 import pandas as pd
 
 from ..functions.scoring import StumpModel
+from ..plans.packaging import (
+    ensure_workers_can_import,
+    guard_zip_directory_reads,
+)
 from ..sources.model_store import (
     N_FEATURES_NM1,
     N_FEATURES_NM2,
@@ -46,6 +50,19 @@ _PASSTHROUGH_OK = ("input_file",)  # lineage columns carried 1:1 through the sta
 
 # per-executor model cache: broadcast id -> (nm1, nm2)
 _MODEL_CACHE: dict[int, tuple[StumpModel, StumpModel]] = {}
+# driver side: applicationId -> the model broadcast every extraction job
+# of that session ships (one broadcast, one executor cache entry)
+_MODEL_BROADCASTS: dict = {}
+
+
+def _model_broadcast(spark: "SparkSession"):
+    sc = spark.sparkContext
+    bc = _MODEL_BROADCASTS.get(sc.applicationId)
+    if bc is None:
+        nm1, nm2 = load_models()
+        bc = sc.broadcast((nm1.to_rows(1), nm2.to_rows(2)))
+        _MODEL_BROADCASTS[sc.applicationId] = bc
+    return bc
 
 
 def _models_from_broadcast(bc) -> tuple[StumpModel, StumpModel]:
@@ -157,16 +174,15 @@ def extract_documents(df: "DataFrame", spark: "SparkSession | None" = None,
     df = df.select(*cols, *passthrough)
     bc = None
     if spark is not None:
-        from ..plans.packaging import ensure_workers_can_import
-
         ensure_workers_can_import(spark)  # --py-files equivalent
-        nm1, nm2 = load_models()
-        bc = spark.sparkContext.broadcast(
-            (nm1.to_rows(1), nm2.to_rows(2)))
+        bc = _model_broadcast(spark)
 
     schema = EXTRACTED_SCHEMA + "".join(f", {c} string" for c in passthrough)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # from this worker's next task on, task set-up skips re-parsing
+        # the unchanged zips on its import path
+        guard_zip_directory_reads()
         nm1, nm2 = _models_from_broadcast(bc)
         for pdf in batches:
             yield extract_pandas_batch(pdf, nm1, nm2, passthrough, channels)

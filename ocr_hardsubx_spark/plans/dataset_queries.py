@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .packaging import REPO_DIR
+
 N_BANDS = 4  # MinHash LSH bands (each band = one 8-hex slice of an md5)
 # the band hashes are disjoint 8-hex-char slices of one 32-char digest —
 # more than 4 bands would slice past the digest and silently yield ''
@@ -1244,7 +1246,7 @@ def q_ann_ivf_topk_sql() -> str:
 # IVF over the PERSISTED ingest-time layout (scan pruning on the probe)
 # --------------------------------------------------------------------------
 
-IVF_LAYOUT_BASE = "/root/repo/data/ivf_layout"
+IVF_LAYOUT_BASE = os.path.join(REPO_DIR, "data", "ivf_layout")
 IVF_TMP_TTL_S = 3600  # orphaned-builder temp dirs older than this are swept
 # a RECYCLED pid can make a dead builder's orphan look alive forever
 # (os.kill(pid, 0) succeeds for the unrelated process that now owns the
@@ -2469,6 +2471,7 @@ def q_event_window_rate_sql() -> str:
 # --------------------------------------------------------------------------
 
 LINE_DUP_MIN_DOCS = 2  # a line present in >= this many docs is boilerplate
+assert LINE_DUP_MIN_DOCS == 2, "q_line_dedup's min != max census needs 2"
 
 
 def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2496,20 +2499,14 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # original text with an index filter (the q_paragraph_dedup shape:
     # line text no longer crosses any exchange; docs with zero
     # non-empty lines emit no row in either form)
-    if LINE_DUP_MIN_DOCS == 2:
-        # ">= 2 distinct docs" == min(doc_id) != max(doc_id): one plain
-        # min/max shuffle with full map-side partials instead of the
-        # countDistinct Expand + double exchange (the substring-dedup
-        # census trick; the count value itself is never output)
-        dup_h = (hashed.groupBy("h")
-                 .agg(F.min("doc_id").alias("mn"),
-                      F.max("doc_id").alias("mx"))
-                 .where(F.col("mn") != F.col("mx")).select("h"))
-    else:  # pragma: no cover — general threshold needs the real count
-        dup_h = (hashed.groupBy("h")
-                 .agg(F.countDistinct("doc_id").alias("n_docs"))
-                 .where(F.col("n_docs") >= LINE_DUP_MIN_DOCS)
-                 .select("h"))
+    # ">= 2 distinct docs" == min(doc_id) != max(doc_id): one plain
+    # min/max shuffle with full map-side partials instead of the
+    # countDistinct Expand + double exchange (the substring-dedup census
+    # trick; the count value itself is never output)
+    dup_h = (hashed.groupBy("h")
+             .agg(F.min("doc_id").alias("mn"),
+                  F.max("doc_id").alias("mx"))
+             .where(F.col("mn") != F.col("mx")).select("h"))
     dropped = (hashed.join(dup_h, "h")
                .groupBy("doc_id")
                .agg(F.collect_list("pos").alias("dl"),

@@ -7,16 +7,21 @@ executor Python workers can import ``ocr_hardsubx_spark`` no matter where
 the driver process started — the same code path spark-submit uses.
 
 The zip is rebuilt only when a source file is newer than the artifact.
+
+Worker side, ``guard_zip_directory_reads`` keeps a reused Python worker
+from re-parsing every zip on its import path at each task.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
+import zipimport
 
 _PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_REPO_DIR = os.path.dirname(_PKG_DIR)
-DIST_ZIP = os.path.join(_REPO_DIR, "dist", "ocr_hardsubx_spark.zip")
+REPO_DIR = os.path.dirname(_PKG_DIR)
+DIST_ZIP = os.path.join(REPO_DIR, "dist", "ocr_hardsubx_spark.zip")
 
 _registered: set[str] = set()
 
@@ -30,7 +35,7 @@ def build_pyfiles_zip(zip_path: str = DIST_ZIP) -> str:
         for f in files:
             if f.endswith(".py"):
                 sources.append(os.path.join(root, f))
-    models_dir = os.path.join(_REPO_DIR, "models")
+    models_dir = os.path.join(REPO_DIR, "models")
     if os.path.isdir(models_dir):
         sources += [os.path.join(models_dir, f)
                     for f in os.listdir(models_dir) if f.endswith(".json")]
@@ -41,7 +46,7 @@ def build_pyfiles_zip(zip_path: str = DIST_ZIP) -> str:
     tmp = zip_path + ".tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
         for p in sources:
-            z.write(p, os.path.relpath(p, _REPO_DIR))
+            z.write(p, os.path.relpath(p, REPO_DIR))
     os.replace(tmp, zip_path)
     return zip_path
 
@@ -54,3 +59,46 @@ def ensure_workers_can_import(spark) -> None:
         return
     sc.addPyFile(build_pyfiles_zip())
     _registered.add(key)
+
+
+# archive path -> (st_mtime_ns, st_size) of the file when its directory
+# was last read into zipimport's cache
+_zip_stamps: dict[str, tuple[int, int]] = {}
+_stock_invalidate = zipimport.zipimporter.invalidate_caches
+
+
+def _guarded_invalidate(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only when the file changed since the last read."""
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        stamp = None
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if (stamp is not None and files is not None
+            and _zip_stamps.get(self.archive) == stamp):
+        self._files = files
+        return
+    # stat before the read: a rewrite racing the read leaves an older
+    # stamp behind, so the next call reads again
+    _stock_invalidate(self)
+    if stamp is not None and self.archive in zipimport._zip_directory_cache:
+        _zip_stamps[self.archive] = stamp
+    else:
+        _zip_stamps.pop(self.archive, None)
+
+
+def guard_zip_directory_reads() -> None:
+    """Stop ``importlib.invalidate_caches()`` re-parsing unchanged zips.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task; on CPython < 3.13 each zipimporter then eagerly
+    re-reads its archive's whole directory (pyspark.zip: ~1,300 entries,
+    once per importer of it, a dozen or more per worker).  This swaps in a
+    version that re-reads only when the archive's (mtime, size) changed
+    or zipimport's cache lost it.  Idempotent; a no-op on 3.13+, whose
+    invalidation is already lazy."""
+    if sys.version_info >= (3, 13):
+        return
+    zipimport.zipimporter.invalidate_caches = _guarded_invalidate

@@ -29,7 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-FIXTURES_DIR = "/root/repo/data/fixtures"
+from .packaging import REPO_DIR
+
+FIXTURES_DIR = os.path.join(REPO_DIR, "data", "fixtures")
 ORACLE_DOCS = os.path.join(FIXTURES_DIR, "documents_oracle.parquet")
 PART_DOCS = os.path.join(FIXTURES_DIR, "documents_part")
 N_ORACLE_DOCS = 200

@@ -18,6 +18,7 @@ from ocr_hardsubx_spark.plans.curation import (
     read_curated,
     run_curation_job,
 )
+from ocr_hardsubx_spark.plans.packaging import REPO_DIR
 
 SF = "/root/testdata/sf0.001"
 
@@ -123,7 +124,7 @@ def test_cli_smoke(tmp_path):
     r = subprocess.run(
         [sys.executable, "scripts/run_curation.py", "--input", SF,
          "--output", out, "--cores", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600)
+        capture_output=True, text=True, cwd=REPO_DIR, timeout=600)
     assert r.returncode == 0, r.stderr[-2000:]
     summary = json.loads(r.stdout.strip().splitlines()[-1])
     assert summary["n_docs_out"] > 0 and not summary["skipped"]

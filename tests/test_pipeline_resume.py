@@ -13,9 +13,10 @@ from ocr_hardsubx_spark.plans.pipeline import (
     run_extraction_job,
     salt_repartition,
 )
+from ocr_hardsubx_spark.plans.queries import FIXTURES_DIR
 from ocr_hardsubx_spark.sources.fixtures import write_documents
 
-PART_CORPUS = "/root/repo/data/fixtures/documents_part"
+PART_CORPUS = os.path.join(FIXTURES_DIR, "documents_part")
 N_DOCS = 200
 
 

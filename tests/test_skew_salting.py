@@ -8,9 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_hardsubx_spark.plans.pipeline import salt_repartition
+from ocr_hardsubx_spark.plans.queries import FIXTURES_DIR
 from ocr_hardsubx_spark.sources.fixtures import generate_rows
 
-SKEWED = "/root/repo/data/fixtures/documents_skewed"
+SKEWED = os.path.join(FIXTURES_DIR, "documents_skewed")
 N_DOCS = 600
 
 

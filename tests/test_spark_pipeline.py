@@ -5,10 +5,11 @@ import os
 import pytest
 
 from ocr_hardsubx_spark.operators.extract import extract_documents
+from ocr_hardsubx_spark.plans.queries import FIXTURES_DIR
 from ocr_hardsubx_spark.sources.fixtures import write_documents
 
 N_DOCS = 120
-FIXTURE = "/root/repo/data/fixtures/documents_t1.parquet"
+FIXTURE = os.path.join(FIXTURES_DIR, "documents_t1.parquet")
 
 
 @pytest.fixture(scope="module")

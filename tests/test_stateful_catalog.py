@@ -6,12 +6,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_hardsubx_spark.plans.queries import FIXTURES_DIR
 from ocr_hardsubx_spark.sources.catalog import iceberg_available, read_documents
 from ocr_hardsubx_spark.sources.fixtures import write_documents
 from ocr_hardsubx_spark.streaming.stateful_dedup import stateful_host_dedup
 from tests.conftest import drain_stream
 
-PART_CORPUS = "/root/repo/data/fixtures/documents_part"
+PART_CORPUS = os.path.join(FIXTURES_DIR, "documents_part")
 SCHEMA = "url string, warc_ts timestamp, extracted_text string"
 BOILER = "Same navigation heavy page content repeated on every fetch"
 
@@ -91,7 +92,7 @@ def test_read_documents_parquet_fallback_prunes(spark, corpus):
 
 
 def test_read_documents_single_file_falls_back_to_ts_filter(spark):
-    path = "/root/repo/data/fixtures/documents_oracle.parquet"
+    path = os.path.join(FIXTURES_DIR, "documents_oracle.parquet")
     df = read_documents(spark, path, day_range=("2025-01-01", "2025-01-01"))
     assert df.count() > 0
     assert df.where(F.to_date("warc_ts") != "2025-01-01").count() == 0

@@ -11,13 +11,14 @@ from ocr_hardsubx_spark.operators.multimodal import (
     image_features,
 )
 from ocr_hardsubx_spark.operators.regions import extract_regions
+from ocr_hardsubx_spark.plans.queries import FIXTURES_DIR
 from ocr_hardsubx_spark.sources.fixtures import write_documents
 from ocr_hardsubx_spark.streaming.extract_stream import (
     stream_extraction,
     stream_host_rates,
 )
 
-PART_CORPUS = "/root/repo/data/fixtures/documents_part"
+PART_CORPUS = os.path.join(FIXTURES_DIR, "documents_part")
 
 
 @pytest.fixture(scope="module")
