@@ -17,7 +17,6 @@ MIN_PROB_DIFF = 0.1            # minProbabilityDiff for non-max suppression
 MIN_AREA_FRAC = 0.00015        # minArea as fraction of document text chars
 MAX_AREA_FRAC = 0.95           # maxArea fraction (web: main content can dominate)
 MIN_AREA_ABS = 3               # w>2 && h>2 analog: at least 3 text chars
-NON_MAX_SUPPRESSION = True
 
 # --- grouping thresholds (reference: erfilter.c:1506-1596 pair gates; the
 #     triplet/sequence constants are undefined in the reference repo and are

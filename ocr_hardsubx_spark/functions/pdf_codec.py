@@ -20,8 +20,7 @@ Parser coverage (all from the public ISO 32000-1 / Adobe PDF 1.7 spec):
 * Stream filters: FlateDecode (with TIFF predictor 2 and PNG predictors
   10-15), ASCIIHexDecode, ASCII85Decode, RunLengthDecode.  Anything else
   (LZW, DCT, JBIG2, Crypt) raises :class:`UnsupportedPdf` so the operator
-  layer can provenance-flag the row, mirroring the exotic-JPEG policy in
-  ``media_codecs.py``.
+  layer can provenance-flag the row instead of dropping it.
 * Page tree walk with attribute inheritance (``/Resources``, ``/MediaBox``).
 * Content-stream text interpreter: ``BT/ET``, ``Tf``, ``Td``, ``TD``,
   ``Tm``, ``T*``, ``TL``, ``Tc``, ``Tw``, ``Tz``, ``Tj``, ``TJ``, ``'``,
@@ -68,8 +67,8 @@ __all__ = [
 
 
 class UnsupportedPdf(ValueError):
-    """Payload is not a PDF this codec can decode (parallel to
-    media_codecs.UnsupportedMedia)."""
+    """Payload is not a PDF this codec can decode; the caller flags the
+    row, it does not drop it."""
 
 
 # --------------------------------------------------------------------------
@@ -842,9 +841,6 @@ class _Font:
                 ok = False
             out.append(ch)
         return "".join(out), ok
-
-
-_DEFAULT_FONT_SENTINEL = object()
 
 
 # --------------------------------------------------------------------------

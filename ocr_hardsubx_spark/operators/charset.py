@@ -27,9 +27,8 @@ default rather than erroring: at crawl scale every illegal label that
 exists, occurs.
 
 Decode is ``errors="replace"`` with a per-row ``replaced`` provenance
-flag (the same honest-degradation discipline as the media decoders in
-``functions/media_codecs.py``): a mislabelled page yields U+FFFD
-markers and a flag, never a crash and never silently dropped rows.
+flag: a mislabelled page yields U+FFFD markers and a flag, never a
+crash and never silently dropped rows.
 
 Spark shape: one zero-shuffle Arrow-batched ``mapInPandas`` stage over
 ``(url, raw, content_type)`` — the raw bytes die inside the stage,

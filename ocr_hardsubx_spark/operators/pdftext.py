@@ -11,7 +11,7 @@ zero shuffle, batch-at-a-time Python with all per-byte work in the codec.
 Scale: decode is embarrassingly parallel (per-document); partitioning is
 whatever the scan gives (``maxPartitionBytes`` sizes tasks).  Failed or
 exotic payloads are provenance-flagged per row (``decoded_real = false``),
-never dropped silently — the same policy as ``operators/multimodal.py``.
+never dropped silently.
 
 The synthesizer (``pdf_corpus_from_text``) is the writer twin used by
 fixtures and the roundtrip oracle queries: deterministic layout (fixed

@@ -40,6 +40,10 @@ from ocr_hardsubx_spark.plans.pipeline import _commit_manifest, _is_uri
 
 CURATION_STAGES = ("1_raw", "2_url", "3_gopher", "4_repetition", "5_c4",
                    "6_near_dedup", "7_quality")
+# the written dataset; explicit so a zero-survivor run (no data files)
+# still reads back
+CURATED_SCHEMA = ("doc_id long, lang string, text string, n_tokens long, "
+                  "pos long, shard int")
 
 
 def _input_fingerprint(docs: DataFrame) -> str:
@@ -91,22 +95,24 @@ def _survivors(spark: SparkSession, input_dir: str) -> tuple[DataFrame,
 
     gates = ["url_keep", "gopher_keep", "rep_keep", "c4_keep",
              "dedup_keep", "quality_keep"]
-    census = []
-    cur = j
-    for stage, gate, tok in zip(
-            CURATION_STAGES,
-            [None] + gates,
-            ["n_tokens"] * 4 + ["clean_tokens"] * 3):
+    # one census job: stage i counts the rows passing gates[:i] (a NULL
+    # gate fails, as in a where())
+    aggs = []
+    keep = F.lit(True)
+    for i, (gate, tok) in enumerate(zip(
+            [None] + gates, ["n_tokens"] * 4 + ["clean_tokens"] * 3)):
         if gate is not None:
-            cur = cur.where(F.col(gate))
-        r = cur.agg(F.count("*").alias("d"),
-                    F.coalesce(F.sum(tok), F.lit(0)).alias("t")
-                    ).collect()[0]
-        census.append((stage, int(r["d"]), int(r["t"])))
+            keep = keep & F.col(gate)
+        aggs += [F.count(F.when(keep, 1)).alias(f"d{i}"),
+                 F.coalesce(F.sum(F.when(keep, F.col(tok))),
+                            F.lit(0)).alias(f"t{i}")]
+    r = j.agg(*aggs).collect()[0]
+    census = [(stage, int(r[f"d{i}"]), int(r[f"t{i}"]))
+              for i, stage in enumerate(CURATION_STAGES)]
 
-    surv = cur.select("doc_id", "lang",
-                      F.col("clean_text").alias("text"),
-                      F.col("clean_tokens").alias("n_tokens"))
+    surv = j.where(keep).select("doc_id", "lang",
+                                F.col("clean_text").alias("text"),
+                                F.col("clean_tokens").alias("n_tokens"))
     return surv, census
 
 
@@ -195,5 +201,5 @@ def read_curated(spark: SparkSession, output_path: str) -> DataFrame:
         raise FileNotFoundError(f"no committed curation run under "
                                 f"{output_path!r}")
     run_id = runs[-1]["run_id"]
-    return spark.read.parquet(
+    return spark.read.schema(CURATED_SCHEMA).parquet(
         os.path.join(output_path, "data", f"run_id={run_id}"))

@@ -8823,8 +8823,9 @@ def q_payload_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     text/unknown) as a PURE JVM expression over the binary column
     (hex-prefix compare inside whole-stage codegen; no Python, no
     shuffle).  The router a 100 TB ingest uses to send payloads to the
-    right decoder family (html -> extract, pdf -> pdftext, media ->
-    multimodal), upstream of every per-format stage.
+    right decoder family (html -> extract, pdf -> pdftext), upstream of
+    every per-format stage; image and gzip payloads are labelled but not
+    extractable.
 
     Fixture by doc_id % 6 over arithmetic payloads; the oracle
     re-derives signature and verdict from the same arithmetic."""

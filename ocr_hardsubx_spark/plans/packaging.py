@@ -6,7 +6,8 @@ zip of the package) and registers it with ``SparkContext.addPyFile`` so
 executor Python workers can import ``ocr_hardsubx_spark`` no matter where
 the driver process started — the same code path spark-submit uses.
 
-The zip is rebuilt only when a source file is newer than the artifact.
+The zip is rebuilt when a source file is newer than the artifact or the
+set of files it would hold changed (a module added or deleted).
 
 Worker side, ``guard_zip_directory_reads`` keeps a reused Python worker
 from re-parsing every zip on its import path at each task.
@@ -39,14 +40,17 @@ def build_pyfiles_zip(zip_path: str = DIST_ZIP) -> str:
     if os.path.isdir(models_dir):
         sources += [os.path.join(models_dir, f)
                     for f in os.listdir(models_dir) if f.endswith(".json")]
+    names = {os.path.relpath(p, REPO_DIR): p for p in sources}
     newest = max(os.path.getmtime(p) for p in sources)
     if os.path.exists(zip_path) and os.path.getmtime(zip_path) >= newest:
-        return zip_path
+        with zipfile.ZipFile(zip_path) as z:
+            if set(z.namelist()) == set(names):
+                return zip_path
     os.makedirs(os.path.dirname(zip_path), exist_ok=True)
     tmp = zip_path + ".tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-        for p in sources:
-            z.write(p, os.path.relpath(p, REPO_DIR))
+        for name, p in names.items():
+            z.write(p, name)
     os.replace(tmp, zip_path)
     return zip_path
 

@@ -20,7 +20,7 @@ import struct
 import numpy as np
 import pytest
 
-from ocr_hardsubx_spark.functions.media_codecs import (
+from ocr_hardsubx_spark.functions.jpeg_codec import (
     _QM_QE,
     UnsupportedMedia,
     decode_jpeg,
@@ -546,16 +546,6 @@ def test_truncated_stream_pads_zero():
     fix = bytearray(_seq_gray(blocks, 2))
     img = decode_jpeg(bytes(fix[:-6]) + b"\xff\xd9")
     assert img.shape == (16, 16) and img.dtype == np.uint8
-
-
-def test_operator_routes_arith_jpeg_as_real():
-    """multimodal._decode_image now decodes SOF9 payloads for real:
-    decoded_real=True, no stub fallback."""
-    from ocr_hardsubx_spark.operators.multimodal import _decode_image
-
-    img, real = _decode_image(_seq_gray([_z(dc=24)], 1))
-    np.testing.assert_array_equal(img, np.full((8, 8), 152, np.uint8))
-    assert real is True
 
 
 def test_arithmetic_differential_still_unsupported():

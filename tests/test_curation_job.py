@@ -12,6 +12,7 @@ import os
 
 import pytest
 
+from ocr_hardsubx_spark.plans import curation
 from ocr_hardsubx_spark.plans import dataset_queries as dq
 from ocr_hardsubx_spark.plans.curation import (
     committed_curation_runs,
@@ -111,6 +112,25 @@ def test_torn_run_is_invisible(spark, job):
     runs = committed_curation_runs(spark, out)
     assert [r["run_id"] for r in runs] == [summary["run_id"]]
     assert read_curated(spark, out).count() == summary["n_docs_out"]
+
+
+def test_zero_survivor_run_reads_back_empty(spark, tmp_path, monkeypatch):
+    """A committed run whose funnel keeps no doc writes no data file;
+    it still reads back, as an empty frame of the curated columns."""
+    def none_survive(spark, input_dir):
+        surv = spark.createDataFrame(
+            [], "doc_id long, lang string, text string, n_tokens long")
+        return surv, [(s, 0, 0) for s in curation.CURATION_STAGES]
+
+    monkeypatch.setattr(curation, "_survivors", none_survive)
+    out = str(tmp_path / "curated")
+    summary = run_curation_job(spark, SF, out)
+    assert not summary["skipped"] and summary["n_docs_out"] == 0
+    got = read_curated(spark, out)
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("doc_id", "bigint"), ("lang", "string"), ("text", "string"),
+        ("n_tokens", "bigint"), ("pos", "bigint"), ("shard", "int")]
+    assert got.count() == 0
 
 
 def test_cli_smoke(tmp_path):

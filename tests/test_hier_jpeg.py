@@ -16,7 +16,7 @@ import struct
 import numpy as np
 import pytest
 
-from ocr_hardsubx_spark.functions.media_codecs import (
+from ocr_hardsubx_spark.functions.jpeg_codec import (
     UnsupportedMedia,
     _exp_upsample,
     decode_jpeg,
@@ -91,7 +91,7 @@ def _mirror_plane(blocks, bw, bh, width, height, level):
     """Assemble the (height, width) float plane from per-block quantized
     zigzag coefficient dicts via the explicit reference IDCT."""
     from tests.test_jpeg_codec import _jpeg  # noqa: F401 (same zigzag)
-    from ocr_hardsubx_spark.functions.media_codecs import _ZIGZAG
+    from ocr_hardsubx_spark.functions.jpeg_codec import _ZIGZAG
 
     plane = np.zeros((bh * 8, bw * 8))
     for i, b in enumerate(blocks):
@@ -322,17 +322,3 @@ def test_frame_larger_than_dhp_rejected():
     fix = _hier_jpeg(8, 8, [_one_frame(w=16, h=8)])
     with pytest.raises(ValueError, match="larger than DHP"):
         decode_jpeg(fix)
-
-
-def test_operator_routes_hier_jpeg_as_real():
-    from ocr_hardsubx_spark.operators.multimodal import _decode_image
-
-    fix = _hier_jpeg(16, 16, [
-        (8, 8, False, None, _blocks_writer([{0: 16}], False)),
-        (16, 16, True, (1, 1),
-         _blocks_writer([{0: 8}, {0: -8}, {0: 0}, {0: 0}], True)),
-    ])
-    img, real = _decode_image(fix)
-    assert real is True
-    assert img.shape == (16, 16)
-    np.testing.assert_array_equal(img[:8, :8], 152)

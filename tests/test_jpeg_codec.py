@@ -13,8 +13,10 @@ import struct
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from ocr_hardsubx_spark.functions.media_codecs import (
+from ocr_hardsubx_spark.functions.jpeg_codec import (
     UnsupportedMedia,
     decode_jpeg,
 )
@@ -212,17 +214,6 @@ def test_progressive_without_scans_rejected():
         decode_jpeg(jpg)
     with pytest.raises(ValueError):
         decode_jpeg(b"\x00\x01not jpeg")
-
-
-def test_operator_routes_real_jpeg():
-    """multimodal._decode_image now uses the real decoder for baseline
-    JPEG payloads."""
-    from ocr_hardsubx_spark.operators.multimodal import _decode_image
-
-    jpg = _jpeg(8, 8, [(1, 1, 1)], lambda w: _emit_block(w, 10))
-    img, real = _decode_image(jpg)
-    np.testing.assert_array_equal(img, np.full((8, 8), 138, np.uint8))
-    assert real is True
 
 
 # ---- progressive (SOF2): independent in-test progressive encoder ---------
@@ -740,3 +731,67 @@ def test_lossless_partial_scan_declares_out_of_subset():
            + _seg(0xDA, sos) + w.flush() + b"\xff\xd9")
     with pytest.raises(UnsupportedMedia):
         decode_jpeg(jpg)
+
+
+# ---- corruption: fail loudly, terminate, never allocate a bomb ------------
+
+def test_jpeg_ac_run_past_block_raises():
+    """A (run, size) symbol whose run pushes k past coefficient 63 is
+    corruption and must raise — a silent break would leave the symbol's
+    value bits unconsumed and desync the rest of the scan (advisory)."""
+
+    def emit_overshoot(w):
+        length, code = _code_of(DC_COUNTS, DC_SYMBOLS, 0)  # DC diff 0
+        w.put(code, length)
+        for _ in range(3):                 # ZRL x3: k 1 -> 49
+            length, code = _code_of(AC_COUNTS, AC_SYMBOLS, 0xF0)
+            w.put(code, length)
+        for _ in range(8):                 # (1,1) x8: k 49->51->...->63,
+            length, code = _code_of(AC_COUNTS, AC_SYMBOLS, 0x11)
+            w.put(code, length)            # the 8th lands k += 1 = 64
+            w.put(1, 1)                    # the 1-bit coefficient value
+        length, code = _code_of(AC_COUNTS, AC_SYMBOLS, 0x00)  # EOB
+        w.put(code, length)
+
+    jpg = _jpeg(8, 8, [(1, 1, 1)], emit_overshoot)
+    with pytest.raises(ValueError, match="AC run past block"):
+        decode_jpeg(jpg)
+
+
+def test_decode_bomb_dimensions_rejected():
+    """A corrupt SOF claiming absurd dimensions raises BEFORE any big
+    allocation (the fuzz suite found a mutated SOF driving a ~30GB
+    plane)."""
+    sof = (bytes([8]) + struct.pack(">HH", 65535, 65535)
+           + bytes([1, 1, 0x11, 0]))
+    seg = bytes([0xFF, 0xC0]) + struct.pack(">H", len(sof) + 2) + sof
+    with pytest.raises(UnsupportedMedia):
+        decode_jpeg(b"\xff\xd8" + seg + b"\xff\xd9")
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(0, 2 ** 32 - 1), st.integers(0, 2))
+def test_decoder_fuzz_terminates(seed, kind):
+    """Random and mutated-valid payloads: the decoder must terminate with
+    a normal exception or a valid array — never hang.  Mutations flip
+    bytes inside structurally valid baseline (kind 1) and progressive
+    (kind 2) fixtures so parsing gets past the markers."""
+    rng = np.random.default_rng(seed)
+    if kind == 0:
+        payload = bytes(rng.integers(0, 256, size=64, dtype=np.uint8))
+    else:
+        if kind == 1:
+            base = _jpeg(8, 8, [(1, 1, 1)], lambda w: _emit_block(w, 10))
+        else:
+            blk = np.zeros(64, dtype=int)
+            blk[0], blk[3], blk[9] = 7, 3, -2
+            base = _prog_grayscale(8, 8, [blk])
+        b = bytearray(base)
+        for _ in range(rng.integers(1, 6)):
+            b[rng.integers(0, len(b))] = rng.integers(0, 256)
+        payload = bytes(b)
+    try:
+        out = decode_jpeg(payload)
+        assert out is not None
+    except Exception:
+        pass  # any normal exception is fine

@@ -1,4 +1,5 @@
-"""Worker-side zip-directory guard (plans/packaging.py).
+"""--py-files zip builder and worker-side zip-directory guard
+(plans/packaging.py).
 
 pyspark's worker calls ``importlib.invalidate_caches()`` at every task;
 the guard keeps that from re-parsing unchanged zips on the import path
@@ -128,6 +129,28 @@ def test_no_patch_on_lazy_invalidation(monkeypatch):
     monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
     packaging.guard_zip_directory_reads()
     assert zipimport.zipimporter.invalidate_caches is before
+
+
+def test_pyfiles_zip_drops_deleted_module(tmp_path, monkeypatch):
+    """Deleting a module changes no mtime the builder compares, yet the
+    rebuilt zip must not ship it."""
+    pkg = tmp_path / "repo" / "pkg"
+    pkg.mkdir(parents=True)
+    for name in ("__init__", "kept", "gone"):
+        (pkg / f"{name}.py").write_text("X = 1\n")
+        os.utime(pkg / f"{name}.py", (1e9, 1e9))  # before the zip
+    monkeypatch.setattr(packaging, "_PKG_DIR", str(pkg))
+    monkeypatch.setattr(packaging, "REPO_DIR", str(tmp_path / "repo"))
+    zip_path = str(tmp_path / "dist" / "pkg.zip")
+
+    packaging.build_pyfiles_zip(zip_path)
+    with zipfile.ZipFile(zip_path) as z:
+        assert sorted(z.namelist()) == ["pkg/__init__.py", "pkg/gone.py",
+                                        "pkg/kept.py"]
+    (pkg / "gone.py").unlink()
+    packaging.build_pyfiles_zip(zip_path)
+    with zipfile.ZipFile(zip_path) as z:
+        assert sorted(z.namelist()) == ["pkg/__init__.py", "pkg/kept.py"]
 
 
 _PROBE = """

@@ -1,15 +1,10 @@
-"""Streaming extraction, multimodal plumbing, regions table."""
+"""Streaming extraction and the regions table."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_hardsubx_spark.operators.multimodal import (
-    attach_media_meta,
-    audio_frame_sample,
-    image_features,
-)
 from ocr_hardsubx_spark.operators.regions import extract_regions
 from ocr_hardsubx_spark.plans.queries import FIXTURES_DIR
 from ocr_hardsubx_spark.sources.fixtures import write_documents
@@ -60,42 +55,6 @@ def test_streaming_windowed_host_rates(spark, corpus, tmp_path):
     total = sum(r["n_docs"] for r in rows)
     assert total == 200
     assert all(r["host"].startswith("host") for r in rows)
-
-
-def _media_df(spark, n=20):
-    import hashlib
-    rows = [(i, b"\xff\xd8\xff" + hashlib.sha1(str(i).encode()).digest() * 20)
-            for i in range(n)]
-    return spark.createDataFrame(rows, "id long, payload binary")
-
-
-def test_media_meta(spark):
-    out = attach_media_meta(_media_df(spark)).collect()
-    assert len(out) == 20
-    for r in out:
-        assert r["format"] == "jpeg"
-        assert r["width"] >= 16 and r["height"] >= 16
-        assert r["n_bytes"] > 0
-        # these payloads sniff as jpeg but are garbage: the declared
-        # fake decoded them, and the schema says so (provenance flag)
-        assert r["decoded_real"] is False
-
-
-def test_image_features_deterministic(spark):
-    a = {r["id"]: r["phash"] for r in image_features(_media_df(spark)).collect()}
-    b = {r["id"]: r["phash"] for r in image_features(_media_df(spark)).collect()}
-    assert a == b
-    grids = image_features(_media_df(spark, 3)).collect()
-    assert all(len(r["grid"]) == 64 for r in grids)
-
-
-def test_audio_frame_sampling(spark):
-    out = audio_frame_sample(_media_df(spark, 5), frame_hop=256).collect()
-    for r in out:
-        assert r["n_samples"] >= 1000
-        assert r["frame_offsets"][0] == 0
-        assert all(b - a == 256 for a, b in
-                   zip(r["frame_offsets"], r["frame_offsets"][1:]))
 
 
 def test_regions_table_contract(spark, corpus):
