@@ -28,13 +28,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ocr_hardsubx_spark.plans.packaging import REPO_DIR  # noqa: E402
 from ocr_hardsubx_spark.plans.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
-BENCH_CORPUS = f"/root/repo/data/bench/documents_{BENCH_DOCS}"
-SCRATCH = "/root/repo/data/bench/out"
+BENCH_CORPUS = os.path.join(REPO_DIR, "data", "bench",
+                            f"documents_{BENCH_DOCS}")
+SCRATCH = os.path.join(REPO_DIR, "data", "bench", "out")
+BASELINE_MD = os.path.join(REPO_DIR, "BENCH", "BASELINE.md")
 
 # idle-box reference for the single-threaded parse guard (median of
 # judge + builder idle measurements, rounds 2-5); the contended flag
@@ -338,17 +341,16 @@ def _post_bench_correctness(spark) -> int:
 
 def write_baseline_md(results: dict, eff_2_8: float, eff_8_32: float,
                       ceiling: float) -> None:
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.dirname(BASELINE_MD), exist_ok=True)
     # preserve manually-appended sections (e.g. the spark-submit evidence)
     extra = ""
-    path = "/root/repo/BENCH/BASELINE.md"
-    if os.path.exists(path):
-        old = open(path).read()
+    if os.path.exists(BASELINE_MD):
+        old = open(BASELINE_MD).read()
         k = old.find("## spark-submit")
         if k >= 0:
             extra = old[k:]
     r2, r8, r32 = results[2], results[8], results[32]
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(BASELINE_MD, "w") as f:
         f.write(f"""# BENCH/BASELINE — scaling-efficiency evidence
 
 Protocol (BASELINE.md): the SAME extraction job (read -> fused

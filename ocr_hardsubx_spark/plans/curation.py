@@ -13,7 +13,12 @@ Cost shape: each composed operator scans the documents table itself
 registered, oracle-verified operators beats hand-fusing copies of
 their logic, scans parallelize embarrassingly, and a production run at
 100 TB would point the composed frames at a cached/materialized
-snapshot rather than re-fusing the operators.
+snapshot rather than re-fusing the operators.  The two iterative
+operators keep their driver loops cheap per step: the trained quality
+cut's LR training is one histogram aggregation plus driver-side steps
+(no Spark job per step), and near-dedup's connected components plans
+the candidate pair graph once and runs each label round as one join +
+one aggregate checkpoint + one count.
 
 Crash-safety model: curation is a CORPUS-GLOBAL computation (the dedup
 keep list sees every document), so the extraction job's per-input-file
@@ -142,8 +147,9 @@ def run_curation_job(spark: SparkSession, input_dir: str,
     snapshot is already committed (idempotent re-run)."""
     import pyarrow as pa
 
-    docs = dq._tbl(spark, input_dir, "documents")
-    fp = _input_fingerprint(docs)
+    # a 3-number aggregate: the round-robin fan-out would only shuffle text
+    fp = _input_fingerprint(
+        dq._tbl(spark, input_dir, "documents", fanout=False))
     for run in committed_curation_runs(spark, output_path):
         if run["fingerprint"] == fp:
             return {"run_id": run["run_id"], "skipped": True,

@@ -2651,8 +2651,15 @@ def _connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS
     ``(doc_a, doc_b)`` -> ``(doc_id, cluster_rep)`` for every node in
     the graph (cluster_rep = the component's min doc_id).
 
-    Each iteration is ONE shuffle (labels join edges -> min agg);
-    iteration count ~ component diameter, tiny for near-dup families
+    The pair graph is planned ONCE: a single explode per pair row emits
+    both directed edges plus a self-loop per endpoint, so the candidate
+    plan under ``pairs`` (LSH, verification, UDFs) runs one time, into
+    the edge checkpoint.  The self-loops make a round one join and one
+    aggregate: edges join labels on dst, then groupBy(src) — min(lbl)
+    is least(own, neighbours'), and the same aggregate flags whether
+    the label moved.  That is one shuffle per join side plus one for
+    the aggregate, then a count of the moved flags on the checkpoint.
+    Iteration count ~ component diameter, tiny for near-dup families
     (boilerplate clusters are dense).  The loop checkpoints lineage per
     round (localCheckpoint — iterative plans otherwise grow without
     bound) and its convergence check is an explicit action; hitting
@@ -2660,31 +2667,25 @@ def _connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS
     (the repo's no-silent-caps discipline).  At 10^12 docs with
     adversarial diameters you'd swap in large-star/small-star; the
     fixpoint contract is identical."""
+    a, b = F.col("doc_a"), F.col("doc_b")
     edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"),
-                            F.col("doc_a").alias("dst")))
-        .distinct().localCheckpoint()
+        pairs.select(F.explode(F.array(*[
+            F.struct(s.alias("src"), d.alias("dst"))
+            for s, d in ((a, b), (b, a), (a, a), (b, b))])).alias("e"))
+        .select("e.src", "e.dst").distinct().localCheckpoint()
     )
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("lbl", F.col("doc_id")))
+    src, dst = F.col("src"), F.col("dst")
+    labels = edges.where(src == dst).select(src.alias("doc_id"),
+                                            src.alias("lbl"))
     for _ in range(max_iters):
-        prop = (
-            edges.join(labels, edges["dst"] == labels["doc_id"])
-            .groupBy("src").agg(F.min("lbl").alias("nlbl")))
-        nxt = (
-            labels.join(prop, labels["doc_id"] == prop["src"], "left")
-            .select(labels["doc_id"],
-                    F.least(labels["lbl"],
-                            F.coalesce(prop["nlbl"], labels["lbl"]))
-                    .alias("lbl"))
+        labels = (
+            edges.join(labels, dst == F.col("doc_id"))
+            .groupBy(src.alias("doc_id"))
+            .agg(F.min("lbl").alias("lbl"),
+                 (F.min("lbl") < F.max(F.when(src == dst, F.col("lbl"))))
+                 .alias("moved"))
             .localCheckpoint())
-        changed = (
-            nxt.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.lbl") < F.col("o.lbl")).count())
-        labels = nxt
-        if changed == 0:
+        if labels.where("moved").count() == 0:
             return labels.select("doc_id", F.col("lbl").alias("cluster_rep"))
     raise RuntimeError(
         f"connected components did not converge in {max_iters} iterations")
@@ -2731,8 +2732,8 @@ def q_dup_clusters_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline keeps ONE canonical doc per unified cluster, not one per
     modality.  Shape: both pair sources are the already-bucketed
     candidates-then-verify queries (never all-pairs); the union is a
-    narrow (doc_a, doc_b) frame feeding the same one-shuffle-per-round
-    label propagation as q_dup_clusters."""
+    narrow (doc_a, doc_b) frame feeding the same label propagation as
+    q_dup_clusters."""
     jacc = q_jaccard_candidates(spark, sf_dir).select("doc_a", "doc_b")
     sim = q_simhash_candidates(spark, sf_dir).select("doc_a", "doc_b")
     return _connected_components(jacc.unionByName(sim).distinct())
@@ -4969,7 +4970,8 @@ def q_dedup_incremental_sql() -> str:
 # a curation pipeline also needs to TRAIN its quality models over the
 # corpus itself.  One full-batch logistic-regression gradient step is
 # the oracle-checkable unit (everything is one map-side-combinable
-# aggregation); lr_train loops it, mirroring ivf_lloyd / pq_lloyd.
+# aggregation); lr_train runs the same step in a driver loop over a
+# one-pass feature histogram.
 
 LR_INIT_W = (0.1, -0.2, 0.3)   # pinned non-zero start (w=0 makes every
                                # sigmoid 0.5 — a vacuous first step)
@@ -5046,23 +5048,40 @@ def q_quality_lr_step_sql() -> str:
 
 def lr_train(spark: SparkSession, sf_dir: str,
              iters: int = 20) -> list[float]:
-    """Full-batch logistic training loop from LR_INIT_W: each step is
-    one aggregation job collecting 3 numbers (mirrors ivf_lloyd's
-    driver loop — the model is driver-resident, the data never is).
-    Returns the trained weights; the loss-decreases property is pinned
-    in tests."""
+    """Full-batch logistic training from LR_INIT_W: ONE aggregation
+    pass, then ``iters`` gradient steps on the driver.
+
+    Every step is a function of the (x1, x2, y) triples alone, and they
+    take boundedly many values whatever the corpus size: x1 =
+    min(n, 200)/200 and x2 is a ratio rounded to 6 dp, so a
+    ``groupBy(x1, x2, y).count()`` histogram has at most
+    2 * (19,900 + 1,000,001) rows (and never more than one per doc).
+    Each step is then grad_j = sum(count * (sigmoid(w.x) - y) * x_j) / N
+    in float64 numpy, the same expressions in the same order as
+    q_quality_lr_step; only the summation order differs from Spark's
+    distributed avg (~1 ulp).
+    Rows with a NULL label are skipped, as avg() skips them.  Returns
+    the trained weights; the loss-decreases property is pinned in
+    tests."""
+    import numpy as np
+
     docs = _tbl(spark, sf_dir, "documents")
     xs, y = _lr_features()
-    feat = docs.select(*xs, y)
+    hist = [r for r in docs.select(*xs[1:], y).groupBy("x1", "x2", "y")
+            .count().collect() if r["y"] is not None]
+    x = [np.ones(len(hist)),
+         np.array([r["x1"] for r in hist], dtype=np.float64),
+         np.array([r["x2"] for r in hist], dtype=np.float64)]
+    yv = np.array([r["y"] for r in hist], dtype=np.float64)
+    cnt = np.array([r["count"] for r in hist], dtype=np.float64)
+    n = cnt.sum()
     w = list(LR_INIT_W)
     for _ in range(iters):
-        z = sum(F.col(f"x{j}") * w[j] for j in range(3))
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        g = feat.agg(*[
-            F.avg((p - F.col("y")) * F.col(f"x{j}")).alias(f"g{j}")
-            for j in range(3)]).collect()[0]
-        w = [w[j] - LR_RATE * g[f"g{j}"] for j in range(3)]
-    return w
+        z = x[0] * w[0] + x[1] * w[1] + x[2] * w[2]
+        p = 1.0 / (1.0 + np.exp(-z))
+        w = [w[j] - LR_RATE * (((p - yv) * x[j] * cnt).sum() / n)
+             for j in range(3)]
+    return [float(v) for v in w]
 
 
 def lr_loss(spark: SparkSession, sf_dir: str, w: list[float]) -> float:
@@ -5164,19 +5183,20 @@ def q_quality_cut_trained(spark: SparkSession,
     trained twin of q_quality_cut (which stays as the cold-start
     sketch-median path).
 
-    Shape: training is LR_TRAIN_ITERS one-aggregation passes (the
-    model stays driver-resident, 3 numbers per step); scoring is a
-    pure narrow projection — the weights ride into the plan as
-    literals (the "4-ish broadcast scalars" form), so the cut itself
-    is scan -> project with zero shuffles at any corpus size.
+    Shape: training is ONE aggregation pass (lr_train's bounded
+    (x1, x2, y) histogram) followed by LR_TRAIN_ITERS driver-side
+    steps over it; scoring is a pure narrow projection — the weights
+    ride into the plan as literals (the "4-ish broadcast scalars"
+    form), so the cut itself is scan -> project with zero shuffles at
+    any corpus size.
 
     Cross-engine determinism: the weights are rounded to 6 decimals
-    BEFORE scoring on both engines.  Spark's distributed avg and the
-    oracle's sequential avg accumulate in different orders, so the
-    raw trained weights differ by ~1 ulp (measured 1.1e-16 after 20
-    steps at sf0.01); rounding collapses that to bit-identical
-    doubles, after which z, sigmoid, and the keep compare are the
-    same IEEE ops in the same order on both engines."""
+    BEFORE scoring on both engines.  The driver's histogram-weighted
+    sums and the oracle's sequential avg accumulate in different
+    orders, so the raw trained weights differ by ~1 ulp; rounding
+    collapses that to bit-identical doubles, after which z, sigmoid,
+    and the keep compare are the same IEEE ops in the same order on
+    both engines."""
     w = lr_train(spark, sf_dir, iters=LR_TRAIN_ITERS)
     wr = [round(x, 6) for x in w]
     docs = _tbl(spark, sf_dir, "documents")

@@ -132,6 +132,39 @@ def test_lr_step_matches_hand_gradient(spark, tmp_path):
         assert got[j]["w_new"] == round(w[j] - dq.LR_RATE * g, 6)
 
 
+def _jobs_in_group(spark, group, fn):
+    """Number of Spark jobs ``fn()`` fires, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lr_train_job_count_independent_of_iters(spark):
+    """Training is one aggregation pass plus driver-side steps: 1 and
+    LR_TRAIN_ITERS steps fire the same number of Spark jobs."""
+    dq.lr_train(spark, SF, iters=1)  # warm the reader cache
+    one = _jobs_in_group(spark, "lr_train_1",
+                         lambda: dq.lr_train(spark, SF, iters=1))
+    full = _jobs_in_group(
+        spark, "lr_train_full",
+        lambda: dq.lr_train(spark, SF, iters=dq.LR_TRAIN_ITERS))
+    assert one >= 1 and full == one
+
+
+def test_lr_train_one_step_equals_registered_step(spark):
+    """lr_train's first driver-side step is the oracle-checked
+    q_quality_lr_step (6-dp outputs)."""
+    step = sorted((r["j"], r["w_new"]) for r in
+                  dq.q_quality_lr_step(spark, SF).collect())
+    assert [round(w, 6) for w in dq.lr_train(spark, SF, iters=1)] == [
+        w for _, w in step]
+
+
 def test_minhash_bands_survive_short_docs(spark, tmp_path):
     """Sub-3-token docs crashed the signature query under ANSI
     element_at (latent until round-5 edge fixtures; fixed with
