@@ -71,15 +71,17 @@ def q_dedup_exact_sql() -> str:
 _FRAME_CACHE: dict = {}
 
 
-def _stamped_state(cache: dict, spark: SparkSession, tag: str,
-                   sf_dir: str, source: str):
+def _stamped_value(cache: dict, spark: SparkSession, tag: str,
+                   sf_dir: str, source: str, build, release=None):
     """The shared cache discipline (one implementation for the frame
-    cache AND driver-value caches like the IVF seeds): key on
-    (applicationId, tag, sf_dir), stamp on the source file's mtime, and
-    evict entries from other (stopped) sessions — their cached values
-    are dead weight and unpersist against a stopped session would be a
-    silent no-op anyway (round-2 advisory).  Returns
-    (key, stamp, fresh_value_or_None, stale_value_or_None)."""
+    cache, the table readers AND driver-value caches like the IVF seeds
+    and Bloom words): key on (applicationId, tag, sf_dir), stamp on the
+    source file's mtime, and evict entries from other (stopped)
+    sessions — their cached values are dead weight and unpersist
+    against a stopped session would be a silent no-op anyway (round-2
+    advisory).  Returns the entry when its stamp is current, else
+    ``build()`` stored under the new stamp; ``release`` (if given) is
+    called on the entry that a changed stamp replaces."""
     try:
         stamp = os.path.getmtime(_t(sf_dir, source))
     except OSError:
@@ -90,24 +92,26 @@ def _stamped_state(cache: dict, spark: SparkSession, tag: str,
     key = (app, tag, sf_dir)
     hit = cache.get(key)
     if hit is not None and hit[0] == stamp:
-        return key, stamp, hit[1], None
-    return key, stamp, None, (hit[1] if hit is not None else None)
+        return hit[1]
+    if hit is not None and release is not None:
+        release(hit[1])
+    value = build()
+    cache[key] = (stamp, value)
+    return value
+
+
+def _unpersist_quietly(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass
 
 
 def _session_cached(spark: SparkSession, tag: str, sf_dir: str,
                     source: str, builder):
-    key, stamp, fresh, stale = _stamped_state(
-        _FRAME_CACHE, spark, tag, sf_dir, source)
-    if fresh is not None:
-        return fresh
-    if stale is not None:
-        try:
-            stale.unpersist()
-        except Exception:
-            pass
-    df = builder().cache()
-    _FRAME_CACHE[key] = (stamp, df)
-    return df
+    return _stamped_value(_FRAME_CACHE, spark, tag, sf_dir, source,
+                          lambda: builder().cache(),
+                          release=_unpersist_quietly)
 
 
 _TABLE_CACHE: dict = {}
@@ -161,7 +165,7 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str,
     Spark JOB — at sandbox scale a visible blip per plan build, at 10^6
     files a real stage.  DataFrames are immutable lazy plans, so the
     reader is built once per session and reused by every query; the
-    mtime stamp (shared _stamped_state discipline) invalidates it if
+    mtime stamp (shared _stamped_value discipline) invalidates it if
     the source file is rewritten.  tests/test_lsh_planes.py asserts
     warm plan builds fire ZERO jobs.
 
@@ -173,17 +177,16 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str,
     operation is itself a keyed shuffle over a trivial projection (exact
     dedup, window queries) pass ``fanout=False`` — for them the extra
     exchange is pure cost (measured ~+0.4 s at sf1.0 on q_dedup_exact)."""
-    key, stamp, fresh, _ = _stamped_state(
-        _TABLE_CACHE, spark, f"tbl:{name}:{fanout}", sf_dir, name)
-    if fresh is not None:
-        return fresh
-    df = spark.read.parquet(_t(sf_dir, name))
-    if fanout and name in _FANOUT_TABLES:
-        parts = _fanout_parts(spark, _t(sf_dir, name))
-        if parts:
-            df = df.repartition(parts)
-    _TABLE_CACHE[key] = (stamp, df)
-    return df
+    def build():
+        df = spark.read.parquet(_t(sf_dir, name))
+        if fanout and name in _FANOUT_TABLES:
+            parts = _fanout_parts(spark, _t(sf_dir, name))
+            if parts:
+                df = df.repartition(parts)
+        return df
+
+    return _stamped_value(_TABLE_CACHE, spark, f"tbl:{name}:{fanout}",
+                          sf_dir, name, build)
 
 
 MAX_BUCKET = 1000  # LSH hot-bucket cap (members per (band, minhash) bucket)
@@ -208,16 +211,26 @@ def q_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacing 64 per-bit SUM counters, which this query does not have
     (4 min-aggs over one digest), so the JVM form stays.  Negative
     results are results; see BENCH/PLANS.md."""
-    docs = _tbl(spark, sf_dir, "documents")
+    mins = _minhash_mins(_tbl(spark, sf_dir, "documents"))
+    stack_args = ", ".join(f"{b}, m{b}" for b in range(N_BANDS))
+    return mins.select(
+        "doc_id",
+        F.expr(f"stack({N_BANDS}, {stack_args}) AS (band, minhash)"),
+    )
+
+
+def _minhash_mins(docs: DataFrame) -> DataFrame:
+    """(doc_id, m0..m{N_BANDS-1}): the per-band minima of the doc's
+    3-token shingle md5s — the signature q_minhash_bands unpivots and
+    q_decon_fuzzy compares column-wise.
+
+    The shingle is NOT a _gram_frame window: a doc shorter than 3
+    tokens keeps ONE partial shingle (its trimmed tokens), where a
+    window builder yields nothing.  Positions explode first, like
+    _gram_frame (sub-3-token docs are in sf0.01 and the oracle pins
+    that edge)."""
     toks = docs.select(
         "doc_id", F.split(F.col("text"), " ").alias("toks"))
-    # window positions explode FIRST and the shingle string is built in
-    # a codegen'd post-Generate projection — the _substr_grams finding
-    # (a transform() lambda runs interpreted per element).  The
-    # EXPRESSION is untouched, only its evaluation venue moves, so the
-    # sub-3-token partial-shingle edge is preserved verbatim
-    # (exceptAll both ways == 0 at sf0.01, which contains those edge
-    # docs, and on the 50k corpus; warm 1.5 -> 1.3 s, cold 6.1 -> 2.0).
     shingles = toks.select(
         "doc_id", "toks",
         F.explode(F.sequence(
@@ -242,25 +255,28 @@ def q_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         )).alias("shingle"),
     ).where(F.col("shingle") != "")
     h = shingles.select("doc_id", F.md5("shingle").alias("h"))
-    mins = h.groupBy("doc_id").agg(*[
+    return h.groupBy("doc_id").agg(*[
         F.min(F.substring("h", 8 * b + 1, 8)).alias(f"m{b}")
         for b in range(N_BANDS)
     ])
-    stack_args = ", ".join(f"{b}, m{b}" for b in range(N_BANDS))
-    return mins.select(
-        "doc_id",
-        F.expr(f"stack({N_BANDS}, {stack_args}) AS (band, minhash)"),
-    )
 
 
 def q_minhash_bands_sql() -> str:
-    min_cols = ", ".join(
-        f"min(substring(h, {8 * b + 1}, 8)) AS m{b}" for b in range(N_BANDS))
     unpivot = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, m{b} AS minhash FROM mins"
         for b in range(N_BANDS))
     return f"""
-    WITH toks AS (
+    WITH {_minhash_mins_sql()}
+    {unpivot}
+    """
+
+
+def _minhash_mins_sql() -> str:
+    """_minhash_mins as oracle CTEs (toks, shingles, h, mins); ``mins``
+    is (doc_id, m0..m{N_BANDS-1})."""
+    min_cols = ", ".join(
+        f"min(substring(h, {8 * b + 1}, 8)) AS m{b}" for b in range(N_BANDS))
+    return f"""toks AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ),
     shingles AS (
@@ -274,9 +290,7 @@ def q_minhash_bands_sql() -> str:
     h AS (
       SELECT doc_id, md5(shingle) AS h FROM shingles WHERE shingle <> ''
     ),
-    mins AS (SELECT doc_id, {min_cols} FROM h GROUP BY doc_id)
-    {unpivot}
-    """
+    mins AS (SELECT doc_id, {min_cols} FROM h GROUP BY doc_id)"""
 
 
 def q_minhash_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1000,19 +1014,17 @@ def _ivf_seed_vectors(spark: SparkSession, sf_dir: str) -> dict:
     """Raw vectors vec_id 0..IVF_K (query vector + codebook seeds) in
     ONE driver fetch per (session, sf_dir) — the search needs both, and
     two separate collect jobs showed up as half of q_ann_ivf_topk's
-    sandbox wall.  Shares _stamped_state's mtime-stamp + dead-session
+    sandbox wall.  Shares _stamped_value's mtime-stamp + dead-session
     eviction discipline with the frame cache."""
-    key, stamp, fresh, _ = _stamped_state(
-        _IVF_VEC_CACHE, spark, "ivf_seed", sf_dir, "embeddings")
-    if fresh is not None:
-        return fresh
-    rows = (
-        _tbl(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id").between(0, IVF_K))
-        .select("vec_id", "embedding").collect())
-    vecs = {r["vec_id"]: list(r["embedding"]) for r in rows}
-    _IVF_VEC_CACHE[key] = (stamp, vecs)
-    return vecs
+    def build():
+        rows = (
+            _tbl(spark, sf_dir, "embeddings")
+            .where(F.col("vec_id").between(0, IVF_K))
+            .select("vec_id", "embedding").collect())
+        return {r["vec_id"]: list(r["embedding"]) for r in rows}
+
+    return _stamped_value(_IVF_VEC_CACHE, spark, "ivf_seed", sf_dir,
+                          "embeddings", build)
 
 
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
@@ -1272,7 +1284,7 @@ def ensure_ivf_layout(spark: SparkSession, sf_dir: str,
     Idempotent per (sf_dir, embeddings-file mtime): the directory name
     carries the source stamp at NANOSECOND precision (st_mtime_ns — a
     whole-second stamp let a rewrite landing in the same second
-    silently reuse the stale layout, review finding; _stamped_state
+    silently reuse the stale layout, review finding; _stamped_value
     keeps the float mtime for the same reason); the write lands in a
     pid-suffixed temp dir and is renamed into place, so a crashed
     writer never leaves a half-visible layout and concurrent builders
@@ -2481,51 +2493,78 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     between exact-dedup and near-dedup in web pipelines.
 
     Scale shape: explode -> ONE groupBy(line_hash) census with map-side
-    partial counts (the shuffle carries 16-byte hashes + positions, not
-    line text... the text rides only to reassembly) -> hash-join back ->
-    per-doc ordered reassembly via sort_array(collect_list(struct)).
-    Output is narrow: counts + md5 of the kept text."""
+    partials (the shuffle carries 16-byte hashes + positions, never
+    line text) -> hash-join back -> the dropped positions per doc ->
+    _rebuild_kept from the original text.  Output is narrow: counts +
+    md5 of the kept text."""
     docs = _tbl(spark, sf_dir, "documents")
-    lines = docs.select(
-        "doc_id",
-        F.posexplode(F.split("text", r"\. ")).alias("pos", "line"),
-    ).where(F.col("line") != "")
     # narrow per-line frame (hash + position, no text): the census and
     # the dup-probe share it via one materialization
-    hashed = lines.select("doc_id", "pos",
-                          F.md5("line").alias("h")).localCheckpoint()
+    hashed = _text_units(docs).select(
+        "doc_id", "pos", F.md5("unit").alias("h")).localCheckpoint()
     # only hashes AT the dup threshold matter downstream — ship the
-    # DROPPED positions back per doc and rebuild kept_md5 from the
-    # original text with an index filter (the q_paragraph_dedup shape:
-    # line text no longer crosses any exchange; docs with zero
-    # non-empty lines emit no row in either form)
-    # ">= 2 distinct docs" == min(doc_id) != max(doc_id): one plain
-    # min/max shuffle with full map-side partials instead of the
-    # countDistinct Expand + double exchange (the substring-dedup census
-    # trick; the count value itself is never output)
-    dup_h = (hashed.groupBy("h")
-             .agg(F.min("doc_id").alias("mn"),
-                  F.max("doc_id").alias("mx"))
-             .where(F.col("mn") != F.col("mx")).select("h"))
-    dropped = (hashed.join(dup_h, "h")
+    # DROPPED positions back per doc (line text never crosses an
+    # exchange)
+    dropped = (hashed.join(_multi_doc_keys(hashed, "h"), "h")
                .groupBy("doc_id")
                .agg(F.collect_list("pos").alias("dl"),
                     F.count("*").alias("nd")))
-    arr = F.split("text", r"\. ")
-    return (docs.join(dropped, "doc_id", "left")
-            .select(
+    return _rebuild_kept(docs, dropped, "n_lines", "n_dup_lines")
+
+
+def _text_units(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, unit): the non-empty units of split(text, '\\. ')
+    — the lines of q_line_dedup, the paragraphs of q_paragraph_dedup —
+    with their 0-based position in that split."""
+    return docs.select(
+        "doc_id",
+        F.posexplode(F.split("text", r"\. ")).alias("pos", "unit"),
+    ).where(F.col("unit") != "")
+
+
+def _multi_doc_keys(df: DataFrame, key: str) -> DataFrame:
+    """The ``key`` values of (doc_id, key, ...) rows that occur in >= 2
+    distinct docs.  ">= 2 distinct docs" == min(doc_id) != max(doc_id):
+    one plain min/max shuffle with full map-side partials instead of
+    the countDistinct Expand + double exchange (the count itself is
+    never needed)."""
+    return (df.groupBy(key)
+            .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
+            .where(F.col("mn") != F.col("mx")).select(key))
+
+
+def _rebuild_kept(docs: DataFrame, dropped: DataFrame, n_units: str,
+                  n_dropped: str) -> DataFrame:
+    """(doc_id, n_units, n_dropped, kept_md5) per doc with >= 1
+    non-empty _text_units unit: ``dropped`` is (doc_id, dl = dropped
+    unit positions, nd = their count) for the docs that drop any, and
+    kept_md5 is the md5 of the doc's other non-empty units joined by
+    '. ' — rebuilt from the original text, so only positions ever
+    shuffle.
+
+    The kept positions are array_except(all positions, dl), a hash-set
+    difference: O(units + dropped) per doc.  A per-unit
+    array_contains(dl, i) probe is O(units x dropped) — on one
+    40,000-line doc sharing all but one line with a second doc
+    (local[4], 4 cores, warm) q_line_dedup took 13.5-16.5 s that way
+    and 2.0-4.2 s this way, q_paragraph_dedup 11.8-14.3 s vs
+    1.5-2.7 s, same rows."""
+    arrs = (docs.join(dropped, "doc_id", "left")
+            .select("doc_id", "dl", "nd",
+                    F.split("text", r"\. ").alias("arr")))
+    kept_pos = F.array_except(
+        F.sequence(F.lit(0), F.size("arr") - 1),
+        F.coalesce("dl", F.array().cast("array<int>")))
+    kept = F.filter(F.transform(kept_pos,
+                                lambda i: F.element_at("arr", i + 1)),
+                    lambda x: x != "")
+    return (arrs.select(
                 "doc_id",
-                F.size(F.filter(arr, lambda x: x != ""))
-                 .cast("bigint").alias("n_lines"),
-                F.coalesce("nd", F.lit(0).cast("bigint"))
-                 .alias("n_dup_lines"),
-                F.md5(F.array_join(
-                    F.filter(arr, lambda x, i:
-                             (x != "") & ~F.coalesce(
-                                 F.array_contains(F.col("dl"), i),
-                                 F.lit(False))),
-                    ". ")).alias("kept_md5"))
-            .where(F.col("n_lines") > 0))
+                F.size(F.filter("arr", lambda x: x != ""))
+                 .cast("bigint").alias(n_units),
+                F.coalesce("nd", F.lit(0).cast("bigint")).alias(n_dropped),
+                F.md5(F.array_join(kept, ". ")).alias("kept_md5"))
+            .where(F.col(n_units) > 0))
 
 
 def q_line_dedup_sql() -> str:
@@ -2562,18 +2601,41 @@ DECON_NGRAM = 8
 DECON_BENCH_DOCS = 10  # docs 0..9 stand in for the benchmark/eval set
 
 
-def _decon_grams(docs: DataFrame) -> DataFrame:
-    """(doc_id, g) with g = md5 of each DECON_NGRAM-token gram (the
-    same guarded generation as q_decontaminate)."""
-    # explode-first + codegen'd gram build (the _substr_grams finding)
+def _window_starts(arr, k: int):
+    """0-based start of every full k-element window of ``arr``; EMPTY
+    when arr is shorter than k (never sequence(0, negative), which
+    would count DOWN and emit bogus windows)."""
+    return F.when(F.size(arr) >= k, F.sequence(F.lit(0), F.size(arr) - k)) \
+            .otherwise(F.array().cast("array<int>"))
+
+
+def _window_text(toks, i, k: int):
+    """The k-token window of ``toks`` starting at 0-based ``i``, joined
+    with single spaces (empty tokens kept, as the oracles'
+    array_to_string(t[i:i+k-1], ' ') keeps them)."""
+    return F.array_join(F.slice(toks, i + 1, k), " ")
+
+
+def _gram_frame(docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, i, g): g = md5 of each full k-token window of the
+    space-split text, i its 0-based start; docs shorter than k give no
+    rows.  The one gram builder of the exact-gram families (decon,
+    substring dedup, n-gram novelty).  _minhash_mins' shingles are a
+    separate idea: a doc shorter than 3 tokens still gets one partial
+    shingle there.
+
+    The positions explode FIRST and each gram is built in a codegen'd
+    post-Generate projection: inside a transform() lambda the
+    slice+join+md5 run through the interpreted higher-order-function
+    evaluator per element (the round-3 HOF finding), and these stages
+    hash up to k x the corpus text bytes.  Measured on the substring
+    census: 1.2 -> 0.54 s warm on the 50k-doc corpus, bit-identical
+    output (exceptAll both ways == 0)."""
     t = docs.select("doc_id", F.split("text", " ").alias("t"))
-    n = F.greatest(F.size("t") - (DECON_NGRAM - 1), F.lit(0))
-    idx = F.when(n > 0, F.sequence(F.lit(0), n - 1)) \
-           .otherwise(F.array().cast("array<int>"))
-    return (t.select("doc_id", "t", F.explode(idx).alias("i"))
-            .select("doc_id",
-                    F.md5(F.array_join(
-                        F.slice("t", F.col("i") + 1, DECON_NGRAM), " "))
+    return (t.select("doc_id", "t",
+                     F.explode(_window_starts(F.col("t"), k)).alias("i"))
+            .select("doc_id", "i",
+                    F.md5(_window_text(F.col("t"), F.col("i"), k))
                      .alias("g")))
 
 
@@ -2590,9 +2652,11 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(doc_id) with map-side partials for the overlap count.  The
     corpus side never shuffles its text — only (doc_id, gram-hash)."""
     docs = _tbl(spark, sf_dir, "documents")
-    bench = (_decon_grams(docs.where(F.col("doc_id") < DECON_BENCH_DOCS))
+    bench = (_gram_frame(docs.where(F.col("doc_id") < DECON_BENCH_DOCS),
+                         DECON_NGRAM)
              .select("g").distinct())
-    corpus = _decon_grams(docs.where(F.col("doc_id") >= DECON_BENCH_DOCS))
+    corpus = _gram_frame(docs.where(F.col("doc_id") >= DECON_BENCH_DOCS),
+                         DECON_NGRAM)
     hits = (
         corpus.join(F.broadcast(bench), "g")
         .groupBy("doc_id")
@@ -3905,6 +3969,21 @@ def _bloom_positions(gram_md5_col):
 _BLOOM_CACHE: dict = {}
 
 
+def _pack_bloom_words(hashes: DataFrame) -> list[int]:
+    """The BLOOM_M-bit filter over the md5 column ``g`` of ``hashes``
+    (bits at its _bloom_positions) as BLOOM_M/64 signed longs — one
+    distinct+collect job."""
+    pos_rows = (
+        hashes.select(F.explode(F.array(
+            *_bloom_positions(F.col("g")))).alias("p"))
+        .distinct().collect())
+    words = [0] * (BLOOM_M // 64)
+    for r in pos_rows:
+        words[r["p"] >> 6] |= 1 << (r["p"] & 63)
+    # signed-long literals (Spark longs are signed; bit 63 wraps)
+    return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
+
+
 def _bloom_words(spark: SparkSession, sf_dir: str) -> list[int]:
     """The benchmark Bloom filter as 1024 signed longs, built ONCE per
     (session, sf_dir) with the shared mtime-stamp cache discipline —
@@ -3912,23 +3991,11 @@ def _bloom_words(spark: SparkSession, sf_dir: str) -> list[int]:
     and without memoization every q_decon_bloom plan build would re-pay
     it (the same per-invocation job class _log_cap_census was made
     opt-in for; review finding)."""
-    key, stamp, fresh, _ = _stamped_state(
-        _BLOOM_CACHE, spark, "decon_bloom", sf_dir, "documents")
-    if fresh is not None:
-        return fresh
-    docs = _tbl(spark, sf_dir, "documents")
-    bench = _decon_grams(docs.where(F.col("doc_id") < DECON_BENCH_DOCS))
-    pos_rows = (
-        bench.select(F.explode(F.array(
-            *_bloom_positions(F.col("g")))).alias("p"))
-        .distinct().collect())
-    words = [0] * (BLOOM_M // 64)
-    for r in pos_rows:
-        words[r["p"] >> 6] |= 1 << (r["p"] & 63)
-    # signed-long literals (Spark longs are signed; bit 63 wraps)
-    words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    _BLOOM_CACHE[key] = (stamp, words)
-    return words
+    return _stamped_value(
+        _BLOOM_CACHE, spark, "decon_bloom", sf_dir, "documents",
+        lambda: _pack_bloom_words(_gram_frame(
+            _tbl(spark, sf_dir, "documents")
+            .where(F.col("doc_id") < DECON_BENCH_DOCS), DECON_NGRAM)))
 
 
 def q_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3950,7 +4017,8 @@ def q_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = F.array(*[F.lit(w)
                       for w in _bloom_words(spark, sf_dir)])
 
-    corpus = _decon_grams(docs.where(F.col("doc_id") >= DECON_BENCH_DOCS))
+    corpus = _gram_frame(docs.where(F.col("doc_id") >= DECON_BENCH_DOCS),
+                         DECON_NGRAM)
     checks = [
         F.call_function(
             "shiftrightunsigned",
@@ -4539,30 +4607,15 @@ SUBSTR_NGRAM = 20   # the exact-substring dedup window (Lee et al. use 50
 
 
 def _substr_grams(docs: DataFrame) -> DataFrame:
-    """(doc_id, i, g): md5 of each SUBSTR_NGRAM-token window with its
-    0-based start position (the position makes span coverage
-    computable downstream; the _decon_grams guard keeps short docs at
-    zero grams, never sequence(1, 0))."""
-    # explode the window positions FIRST, then build each gram in a
-    # codegen'd post-Generate projection: inside a transform() lambda
-    # the slice+join+md5 run through the interpreted HOF evaluator per
-    # element (the round-3 HOF finding), and this stage hashes ~20x the
-    # corpus text bytes.  Measured 1.2 -> 0.54 s warm on the 50k-doc
-    # corpus, bit-identical output (exceptAll both ways == 0).
-    t = docs.select("doc_id", F.split("text", " ").alias("t"))
-    n = F.greatest(F.size("t") - (SUBSTR_NGRAM - 1), F.lit(0))
-    idx = F.when(n > 0, F.sequence(F.lit(0), n - 1)) \
-           .otherwise(F.array().cast("array<int>"))
+    """(doc_id, i, g): the SUBSTR_NGRAM-token _gram_frame (the start
+    position makes span coverage computable downstream)."""
     return (
-        t.select("doc_id", "t", F.explode(idx).alias("i"))
+        _gram_frame(docs, SUBSTR_NGRAM)
         # unhex: ship the digest as its 16 raw bytes, not the 32-char
         # hex string — g is equality-only and internal to both
         # substring queries, so this halves every gram shuffle
         # byte-for-byte (the docstrings always promised a 16-byte hash)
-        .select("doc_id", "i",
-                F.unhex(F.md5(F.array_join(
-                    F.slice("t", F.col("i") + 1, SUBSTR_NGRAM), " ")))
-                 .alias("g")))
+        .select("doc_id", "i", F.unhex("g").alias("g")))
 
 
 def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4586,15 +4639,8 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joined hits feed BOTH rollups — without the checkpoints the
     # explode+md5 pipeline re-runs once per consumer in the same job
     grams = _substr_grams(docs).localCheckpoint()
-    # "appears in >= 2 distinct docs" == min(doc_id) != max(doc_id):
-    # one plain min/max shuffle with full map-side partials instead of
-    # the countDistinct Expand + double exchange (the nd value itself
-    # is never output)
-    dupg = (grams.groupBy("g")
-            .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
-            .where(F.col("mn") != F.col("mx")).select("g"))
     # hits = only occurrences of duplicated grams (the small fraction)
-    hits = grams.join(dupg, "g").localCheckpoint()
+    hits = grams.join(_multi_doc_keys(grams, "g"), "g").localCheckpoint()
     ndup = hits.groupBy("doc_id").agg(F.count("*").alias("n_dup_grams"))
     covered = (
         hits.select("doc_id", F.explode(
@@ -6311,17 +6357,13 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row, so the keep set is recomputable after a crash — the
     q_stratified_sample discipline."""
     docs = _tbl(spark, sf_dir, "documents")
-    paras = docs.select(
-        "doc_id",
-        F.posexplode(F.split("text", r"\. ")).alias("pos", "para"),
-    ).where(F.col("para") != "")
     # the normalized form is computed ONCE (the round-6 form ran the
     # [^a-z] regex twice per para, and hashed fed two consumers with no
     # subtree reuse — 4 regex passes total); hashed is the NARROW
     # per-para frame (hash + packed key, no text) and is materialized
     # once for its two consumers
-    norm = F.regexp_replace(F.lower("para"), "[^a-z]", "")
-    hashed = paras.select(
+    norm = F.regexp_replace(F.lower("unit"), "[^a-z]", "")
+    hashed = _text_units(docs).select(
         "doc_id", "pos",
         F.md5(norm).alias("h"),
         (F.col("doc_id") * PARA_POS_PACK + F.col("pos")).alias("key"),
@@ -6331,31 +6373,14 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = hashed.join(census, "h", "left")
     keep = F.col("unmatchable") | (F.col("key") == F.col("first_key"))
     # ship only the DROPPED positions back to the doc (tiny lists on
-    # the small duplicated fraction) and rebuild kept_md5 from the
-    # original text with an index filter — the round-6 form shuffled
-    # every paragraph's text into the doc rollup's collect_list, i.e.
-    # the whole corpus crossed the final exchange as payload (guide
-    # §2.3: shuffle keys and metadata, re-attach to the payload once).
-    # Docs with zero non-empty paras emit no row in either form (the
-    # n_paras > 0 gate replicates the old inner groupBy domain).
+    # the small duplicated fraction) — the round-6 form shuffled every
+    # paragraph's text into the doc rollup's collect_list, i.e. the
+    # whole corpus crossed the final exchange as payload (guide §2.3:
+    # shuffle keys and metadata, re-attach to the payload once).
     dropped = (joined.where(~keep).groupBy("doc_id")
                .agg(F.collect_list("pos").alias("dl"),
                     F.count("*").cast("bigint").alias("nd")))
-    arr = F.split("text", r"\. ")
-    return (docs.join(dropped, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.size(F.filter(arr, lambda x: x != ""))
-                 .cast("bigint").alias("n_paras"),
-                F.coalesce("nd", F.lit(0).cast("bigint"))
-                 .alias("n_dropped"),
-                F.md5(F.array_join(
-                    F.filter(arr, lambda x, i:
-                             (x != "") & ~F.coalesce(
-                                 F.array_contains(F.col("dl"), i),
-                                 F.lit(False))),
-                    ". ")).alias("kept_md5"))
-            .where(F.col("n_paras") > 0))
+    return _rebuild_kept(docs, dropped, "n_paras", "n_dropped")
 
 
 def q_paragraph_dedup_sql() -> str:
@@ -7650,10 +7675,12 @@ def q_mojibake_fix_sql() -> str:
 # --------------------------------------------------------------------------
 
 def _host_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic host fixture spanning the registered-domain edge
-    cases: www/deep subdomains, two-label public suffixes (co.uk,
-    com.au), plain gTLDs, IPs, and a single-label host."""
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
+    """(doc_id, n_chars, host): deterministic host fixture spanning the
+    registered-domain edge cases: www/deep subdomains, two-label public
+    suffixes (co.uk, com.au), plain gTLDs, IPs, and a single-label host.
+    Read without the _tbl fan-out: every consumer is a projection or a
+    keyed aggregate, so a round-robin exchange would be pure cost."""
+    docs = _tbl(spark, sf_dir, "documents", fanout=False)
     m = F.col("doc_id") % 6
     g = (F.col("doc_id") % 20).cast("string")
     host = (F.when(m == 0, F.concat(F.lit("www.shop"), g,
@@ -7666,7 +7693,7 @@ def _host_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     (F.col("doc_id") % 250)
                                     .cast("string")))
              .otherwise(F.lit("localhost")))
-    return docs.select("doc_id", host.alias("host"))
+    return docs.select("doc_id", "n_chars", host.alias("host"))
 
 
 def q_registered_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7716,9 +7743,7 @@ def q_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic skew-tolerant groupBy)."""
     from ocr_hardsubx_spark.functions.domains import registered_domain
 
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    hosts = _host_corpus(spark, sf_dir).join(docs, "doc_id")
-    return (hosts
+    return (_host_corpus(spark, sf_dir)
             .groupBy(registered_domain(F.col("host"))
                      .alias("registered_domain"))
             .agg(F.count("*").alias("n_docs"),
@@ -8140,31 +8165,14 @@ def q_decon_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     clears DECON_FUZZY_MIN_BANDS — catches lightly-edited benchmark
     copies that exact n-gram overlap misses.
 
-    Scale shape: signatures are the q_minhash_bands one-pass groupBy;
-    the EVAL side is tiny by construction (eval suites are MBs), so
-    the compare is a broadcast crossJoin of N_BANDS-column rows — the
-    stump-table broadcast class, never corpus x corpus — followed by
-    one map-side-combinable max per doc."""
+    Scale shape: signatures are q_minhash_bands' one-pass groupBy
+    (_minhash_mins, so a sub-3-token doc has its one partial shingle
+    here too); the EVAL side is tiny by construction (eval suites are
+    MBs), so the compare is a broadcast crossJoin of N_BANDS-column
+    rows — the stump-table broadcast class, never corpus x corpus —
+    followed by one map-side-combinable max per doc."""
     docs = _tbl(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    shingles = toks.select(
-        "doc_id",
-        F.explode(F.transform(
-            F.sequence(F.lit(0),
-                       F.greatest(F.size("toks") - 3, F.lit(0))),
-            lambda i: F.trim(F.concat_ws(
-                " ",
-                F.try_element_at(F.col("toks"), i + 1),
-                F.try_element_at(F.col("toks"), i + 2),
-                F.try_element_at(F.col("toks"), i + 3),
-            )),
-        )).alias("shingle"),
-    ).where(F.col("shingle") != "")
-    h = shingles.select("doc_id", F.md5("shingle").alias("h"))
-    mins = h.groupBy("doc_id").agg(*[
-        F.min(F.substring("h", 8 * b + 1, 8)).alias(f"m{b}")
-        for b in range(N_BANDS)
-    ])
+    mins = _minhash_mins(docs)
     bench = mins.where(F.col("doc_id") < DECON_BENCH_DOCS).select(
         *[F.col(f"m{b}").alias(f"b{b}") for b in range(N_BANDS)])
     corpus = mins.where(F.col("doc_id") >= DECON_BENCH_DOCS)
@@ -8189,20 +8197,8 @@ def q_decon_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_decon_fuzzy_sql() -> str:
     match_expr = " + ".join(
         f"CAST(c.m{b} = b.m{b} AS INT)" for b in range(N_BANDS))
-    min_cols = ", ".join(
-        f"min(substring(h, {8 * b + 1}, 8)) AS m{b}"
-        for b in range(N_BANDS))
     return f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    sh AS (
-      SELECT doc_id, md5(trim(array_to_string(t[i:i+2], ' '))) AS h
-      FROM toks, LATERAL (SELECT unnest(range(1,
-           greatest(len(t) - 2, 0) + 1)) AS i)
-      WHERE trim(array_to_string(t[i:i+2], ' ')) <> ''
-    ),
-    mins AS (SELECT doc_id, {min_cols} FROM sh GROUP BY doc_id),
+    WITH {_minhash_mins_sql()},
     bench AS (SELECT * FROM mins WHERE doc_id < {DECON_BENCH_DOCS}),
     corpus AS (SELECT * FROM mins WHERE doc_id >= {DECON_BENCH_DOCS}),
     best AS (
@@ -8270,25 +8266,17 @@ def _frontier_bloom_words(spark: SparkSession, sf_dir: str) -> list:
     """Bloom words over the CRAWLED url set (md5-of-url, the
     _bloom_positions slices), cached per (session, sf_dir) like the
     decontamination filter."""
-    key, stamp, fresh, _ = _stamped_state(
-        _BLOOM_CACHE, spark, "frontier_bloom", sf_dir, "documents")
-    if fresh is not None:
-        return fresh
-    crawled = _tbl(spark, sf_dir, "documents").select(
-        F.md5(F.concat(
-            F.lit("https://host"),
-            (F.col("doc_id") % 50).cast("string"),
-            F.lit(".example/doc/"),
-            F.col("doc_id").cast("string"))).alias("g"))
-    pos_rows = (crawled.select(F.explode(F.array(
-        *_bloom_positions(F.col("g")))).alias("p"))
-        .distinct().collect())
-    words = [0] * (BLOOM_M // 64)
-    for r in pos_rows:
-        words[r["p"] >> 6] |= 1 << (r["p"] & 63)
-    words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    _BLOOM_CACHE[key] = (stamp, words)
-    return words
+    def build():
+        crawled = _tbl(spark, sf_dir, "documents").select(
+            F.md5(F.concat(
+                F.lit("https://host"),
+                (F.col("doc_id") % 50).cast("string"),
+                F.lit(".example/doc/"),
+                F.col("doc_id").cast("string"))).alias("g"))
+        return _pack_bloom_words(crawled)
+
+    return _stamped_value(_BLOOM_CACHE, spark, "frontier_bloom", sf_dir,
+                          "documents", build)
 
 
 def q_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8449,14 +8437,15 @@ def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0),
         F.greatest((F.size("t") - 1), F.lit(0)),
         F.lit(CHUNK_STRIDE))
-    # explode-first + codegen'd window join (the _substr_grams finding);
-    # chunk_id stays the position within the starts sequence
+    # stride starts (the final partial window kept), so not
+    # _window_starts; explode-first like _gram_frame, chunk_id = the
+    # position within the starts sequence
     chunks = (toks.select(
         "doc_id", "t",
         F.posexplode(starts).alias("chunk_id", "st"))
         .select("doc_id", "chunk_id",
-                F.array_join(F.slice(F.col("t"), F.col("st") + 1, CHUNK_W),
-                             " ").alias("chunk")))
+                _window_text(F.col("t"), F.col("st"), CHUNK_W)
+                .alias("chunk")))
     return (chunks
             .where(F.col("chunk") != "")
             .select("doc_id", "chunk_id", "chunk",
@@ -8589,24 +8578,16 @@ def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines)."""
     docs = _tbl(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    gram_idx = F.when(
-        F.size("t") >= WINNOW_K,
-        F.sequence(F.lit(0), F.size("t") - WINNOW_K)
-    ).otherwise(F.array().cast("array<int>"))
     grams = toks.select(
         "doc_id",
-        F.transform(gram_idx, lambda i: F.conv(
-            F.substring(F.md5(F.array_join(
-                F.slice(F.col("t"), i + 1, WINNOW_K), " ")), 1, 12),
+        F.transform(_window_starts(F.col("t"), WINNOW_K), lambda i: F.conv(
+            F.substring(F.md5(_window_text(F.col("t"), i, WINNOW_K)),
+                        1, 12),
             16, 10).cast("long")).alias("hs"))
-    win_idx = F.when(
-        F.size("hs") >= WINNOW_W,
-        F.sequence(F.lit(0), F.size("hs") - WINNOW_W)
-    ).otherwise(F.array().cast("array<int>"))
     return (grams.select(
         "doc_id",
         F.explode(F.array_distinct(F.transform(
-            win_idx,
+            _window_starts(F.col("hs"), WINNOW_W),
             lambda j: F.array_min(F.slice(F.col("hs"), j + 1,
                                           WINNOW_W))))).alias("fp")))
 
@@ -8746,21 +8727,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     census, join back on the same key (co-partitioned), then one
     groupBy(doc).  Text never shuffles; fraction rounded 4dp."""
     docs = _tbl(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    idx = F.when(
-        F.size("t") >= NOVELTY_NGRAM,
-        F.sequence(F.lit(0), F.size("t") - NOVELTY_NGRAM)
-    ).otherwise(F.array().cast("array<int>"))
-    # explode-first + codegen'd gram build (the _substr_grams finding)
-    grams = (toks.select("doc_id", "t", F.explode(idx).alias("i"))
-             .select(
-                 "doc_id",
-                 F.md5(F.array_join(
-                     F.slice(F.col("t"), F.col("i") + 1, NOVELTY_NGRAM),
-                     " ")).alias("g"))
-             .distinct())
     # grams feeds the census AND the join-back — materialize once
-    grams = grams.localCheckpoint()
+    grams = (_gram_frame(docs, NOVELTY_NGRAM).select("doc_id", "g")
+             .distinct().localCheckpoint())
     # grams is already distinct on (doc_id, g), so the per-gram count of
     # distinct docs IS the plain row count — no countDistinct Expand
     df = grams.groupBy("g").agg(

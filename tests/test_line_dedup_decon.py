@@ -368,3 +368,149 @@ def test_paragraph_dedup_first_occurrence_is_deterministic(spark, tmp_path):
     assert a == b
     total_dropped = sum(r[2] for r in a)
     assert total_dropped == 4  # 5 copies of "common para" -> 1 kept
+
+
+# ---------------------------------------------------------------------------
+# shared helpers: kept-position rebuild, token windows, MinHash minima
+# ---------------------------------------------------------------------------
+
+
+def _letters(n: int) -> str:
+    """n as base-26 letters: distinct ids that survive CCNet's
+    [^a-z] normalization."""
+    s = ""
+    while True:
+        s = chr(ord("a") + n % 26) + s
+        n //= 26
+        if n == 0:
+            return s
+
+
+def _py_line_dedup(rows):
+    units = {d: t.split(". ") for d, t in rows}
+    docs_of = {}
+    for d, us in units.items():
+        for u in us:
+            if u:
+                docs_of.setdefault(u, set()).add(d)
+    out = {}
+    for d, us in units.items():
+        lines = [u for u in us if u]
+        dup = [u for u in lines if len(docs_of[u]) >= 2]
+        kept = [u for u in lines if len(docs_of[u]) < 2]
+        if lines:
+            out[d] = (len(lines), len(dup), _md5(". ".join(kept)))
+    return out
+
+
+def _py_paragraph_dedup(rows):
+    import re
+
+    def norm(u):
+        return re.sub("[^a-z]", "", u.lower())
+
+    units = {d: t.split(". ") for d, t in rows}
+    first = {}
+    for d in sorted(units):
+        for pos, u in enumerate(units[d]):
+            if u and norm(u):
+                first.setdefault(norm(u), (d, pos))
+    out = {}
+    for d, us in units.items():
+        keep = [u for pos, u in enumerate(us)
+                if u and (not norm(u) or first[norm(u)] == (d, pos))]
+        n = sum(1 for u in us if u)
+        if n:
+            out[d] = (n, n - len(keep), _md5(". ".join(keep)))
+    return out
+
+
+def _dup_heavy_rows():
+    """Doc 1: ~2,000 lines, nearly all boilerplate (also repeated inside
+    the doc), a few unique lines and empty units; doc 2: only
+    boilerplate; doc 3: unrelated."""
+    shared = [f"shared {_letters(j)} footer" for j in range(300)]
+    lines = []
+    for i in range(2000):
+        if i % 97 == 5:
+            lines.append(f"unique {_letters(i)} story")
+        elif i % 251 == 9:
+            lines.append("")
+        else:
+            lines.append(shared[i % 300])
+    return [(1, ". ".join(lines)),
+            (2, ". ".join(shared)),
+            (3, "delta four. epsilon five")]
+
+
+def test_kept_rebuild_matches_python_on_dup_heavy_doc(spark, tmp_path):
+    rows = _dup_heavy_rows()
+    out = _docs_dir(spark, tmp_path, rows)
+    line = {r["doc_id"]: (r["n_lines"], r["n_dup_lines"], r["kept_md5"])
+            for r in dq.q_line_dedup(spark, out).collect()}
+    para = {r["doc_id"]: (r["n_paras"], r["n_dropped"], r["kept_md5"])
+            for r in dq.q_paragraph_dedup(spark, out).collect()}
+    assert line == _py_line_dedup(rows)
+    assert para == _py_paragraph_dedup(rows)
+    # only boilerplate: nothing kept (doc 1 holds the first copies)
+    assert line[2][2] == para[2][2] == _md5("")
+    assert line[1][1] > 1900 and para[1][1] > 1600
+
+
+def test_kept_rebuild_plans_have_no_per_line_probe(spark, tmp_path):
+    """The kept positions are one hash-set difference per doc; an
+    array_contains(dropped, i) probe per line is O(lines x dropped)."""
+    out = _docs_dir(spark, tmp_path, _dup_heavy_rows())
+    for q in (dq.q_line_dedup, dq.q_paragraph_dedup):
+        plan = q(spark, out)._jdf.queryExecution().optimizedPlan().toString()
+        assert "array_contains" not in plan, q.__name__
+        assert "array_except" in plan, q.__name__
+
+
+@pytest.mark.parametrize("k", [3, 8, 20])
+def test_gram_frame_equals_python_windows(spark, k):
+    words = [f"w{i}" for i in range(k + 1)]
+    texts = {
+        1: " ".join(words[:k - 1]),
+        2: " ".join(words[:k]),
+        3: " ".join(words[:k + 1]),
+        4: "solo",
+        5: "  ".join(words[:k]),             # doubled spaces
+        6: " " + " ".join(words[:k]),        # leading space
+        7: " ".join(words[:k]) + " ",        # trailing space
+        8: "",
+    }
+    docs = spark.createDataFrame(sorted(texts.items()),
+                                 "doc_id long, text string")
+    got = sorted(tuple(r) for r in dq._gram_frame(docs, k).collect())
+    want = sorted(
+        (d, i, _md5(" ".join(t[i:i + k])))
+        for d, text in texts.items()
+        for t in [text.split(" ")]
+        for i in range(len(t) - k + 1))
+    assert got == want
+
+
+def test_decon_fuzzy_short_doc_flagged_like_oracle(spark, tmp_path):
+    """A 2-token doc has one partial shingle (the q_minhash_bands
+    signature), so a copy of a 2-token benchmark doc matches on every
+    band — on Spark and on the oracle alike."""
+    import duckdb
+
+    from ocr_hardsubx_spark.plans.dataset_queries import (
+        q_decon_fuzzy, q_decon_fuzzy_sql)
+
+    rows = ([(i, " ".join(f"b{i}x{j}" for j in range(12)))
+             for i in range(dq.DECON_BENCH_DOCS)]
+            + [(20, "hello world"), (21, "plain words here and more")])
+    rows[3] = (3, "hello world")
+    out = _docs_dir(spark, tmp_path, rows)
+    got = sorted(tuple(r) for r in q_decon_fuzzy(spark, out).collect())
+    assert (20, 4, 1.0, True) in got
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{out}/documents.parquet/*.parquet')")
+    want = sorted(
+        (int(d), int(b), float(j), bool(f))
+        for d, b, j, f in con.execute(q_decon_fuzzy_sql()).fetchall())
+    assert got == want
