@@ -2542,26 +2542,30 @@ def _rebuild_kept(docs: DataFrame, dropped: DataFrame, n_units: str,
     '. ' — rebuilt from the original text, so only positions ever
     shuffle.
 
-    The kept positions are array_except(all positions, dl), a hash-set
-    difference: O(units + dropped) per doc.  A per-unit
+    A doc that drops nothing keeps its non-empty units as they are.
+    Otherwise the kept positions are array_except(all positions, dl),
+    a hash-set difference: O(units + dropped) per doc.  A per-unit
     array_contains(dl, i) probe is O(units x dropped) — on one
     40,000-line doc sharing all but one line with a second doc
-    (local[4], 4 cores, warm) q_line_dedup took 13.5-16.5 s that way
-    and 2.0-4.2 s this way, q_paragraph_dedup 11.8-14.3 s vs
-    1.5-2.7 s, same rows."""
+    (local[4], warm) q_line_dedup took 13.2-19.0 s that way and
+    1.6-2.1 s this way, q_paragraph_dedup 12.0-16.6 s vs 1.4-2.1 s,
+    same rows.  Ordinary docs stay as cheap: the empty-unit drops are
+    native array_remove, and only dropping docs pay for the sequence
+    and the lambda — on 300k docs of 1-30 lines, a tenth dropping 1-3,
+    this step took 1.92 s vs the probe's 2.07 s (median of 8 rounds).
+    Running array_except and two lambdas on every doc instead was
+    1.17x the probe there (median of 12 rounds)."""
     arrs = (docs.join(dropped, "doc_id", "left")
             .select("doc_id", "dl", "nd",
                     F.split("text", r"\. ").alias("arr")))
-    kept_pos = F.array_except(
-        F.sequence(F.lit(0), F.size("arr") - 1),
-        F.coalesce("dl", F.array().cast("array<int>")))
-    kept = F.filter(F.transform(kept_pos,
-                                lambda i: F.element_at("arr", i + 1)),
-                    lambda x: x != "")
+    units = F.array_remove("arr", "")
+    kept_pos = F.array_except(F.sequence(F.lit(0), F.size("arr") - 1),
+                              F.col("dl"))
+    kept = F.when(F.col("dl").isNull(), units).otherwise(F.array_remove(
+        F.transform(kept_pos, lambda i: F.element_at("arr", i + 1)), ""))
     return (arrs.select(
                 "doc_id",
-                F.size(F.filter("arr", lambda x: x != ""))
-                 .cast("bigint").alias(n_units),
+                F.size(units).cast("bigint").alias(n_units),
                 F.coalesce("nd", F.lit(0).cast("bigint")).alias(n_dropped),
                 F.md5(F.array_join(kept, ". ")).alias("kept_md5"))
             .where(F.col(n_units) > 0))
@@ -7679,7 +7683,9 @@ def _host_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered-domain edge cases: www/deep subdomains, two-label public
     suffixes (co.uk, com.au), plain gTLDs, IPs, and a single-label host.
     Read without the _tbl fan-out: every consumer is a projection or a
-    keyed aggregate, so a round-robin exchange would be pure cost."""
+    keyed aggregate, so a round-robin exchange is pure cost (sf0.1,
+    local[4]: q_registered_domain 0.40 -> 0.23 s, q_domain_rollup
+    0.81 -> 0.40 s without it and the documents self-join)."""
     docs = _tbl(spark, sf_dir, "documents", fanout=False)
     m = F.col("doc_id") % 6
     g = (F.col("doc_id") % 20).cast("string")
