@@ -76,4 +76,3 @@ ARROW_MAX_RECORDS_PER_BATCH = 512   # docs per Arrow batch (SURVEY §4 O6);
 # plateau — 128 pays too many JVM<->Python crossings, 1024 adds latency
 # variance without throughput
 DEFAULT_SHUFFLE_PARTITIONS = 32
-SALT_BUCKETS = 64                   # legacy knob (salting now uses raw xxhash64)

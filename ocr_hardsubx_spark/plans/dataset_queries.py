@@ -310,8 +310,6 @@ def q_minhash_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _session_cached(spark, "minhash_sig", sf_dir, "documents",
                           lambda: q_minhash_bands(spark, sf_dir))
     counts = sig.groupBy("band", "minhash").agg(F.count("*").alias("n"))
-    _log_cap_census("q_minhash_dup_candidates", counts, "band",
-                    MAX_BUCKET, "docs")
     ok_buckets = (
         counts.where(F.col("n").between(2, MAX_BUCKET))
         .select("band", "minhash")
@@ -1553,48 +1551,10 @@ def _nd_capped_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Codes minus hot buckets: members of codes with > EMB_MAX_BUCKET
     vectors are out of BOTH join sides (their pairs are exact-dup
     territory); what was dropped is observable via
-    q_embed_neardup_census and the driver-side cap log."""
+    q_embed_neardup_census."""
     ok = (_nd_bucket_counts(spark, sf_dir)
           .where(F.col("n") <= EMB_MAX_BUCKET).select("tbl", "code"))
     return _nd_codes_long(spark, sf_dir).join(ok, ["tbl", "code"])
-
-
-CAP_CENSUS_LOG_ENV = "SPARK_GRAFT_CAP_CENSUS_LOG"
-
-
-def _log_cap_census(name: str, counts: DataFrame, group_col: str,
-                    cap: int, unit: str) -> None:
-    """No silent caps: log what each hot-bucket cap dropped (count of
-    capped buckets + member rows per table/band).
-
-    OPT-IN (set ``SPARK_GRAFT_CAP_CENSUS_LOG=1``): the aggregation is an
-    eager ``collect`` — an extra Spark job fired at plan-BUILD time,
-    which at 100 TB is real money on every candidate-query invocation
-    (round-3 verdict item 6).  The registered census queries
-    (q_minhash_band_census / q_embed_neardup_census) carry the standing
-    observability contract; this log is a debugging convenience.
-    Failures never break the query (observability, not semantics)."""
-    if os.environ.get(CAP_CENSUS_LOG_ENV, "") != "1":
-        return
-    try:
-        dropped = (
-            counts.where(F.col("n") > cap)
-            .groupBy(group_col)
-            .agg(F.count("*").alias("n_buckets"), F.sum("n").alias("n_rows"))
-            .collect()
-        )
-        import logging
-
-        log = logging.getLogger("ocr_hardsubx_spark.caps")
-        if not dropped:
-            log.info("%s: cap %d dropped nothing", name, cap)
-        for r in dropped:
-            log.warning(
-                "%s: %s=%s cap %d dropped %d hot buckets (%d %s)",
-                name, group_col, r[group_col], cap, r["n_buckets"],
-                r["n_rows"], unit)
-    except Exception:  # pragma: no cover - observability must never kill
-        pass
 
 
 def q_embed_neardup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,7 +1630,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
        exact-duplicate floods belong to q_dedup_exact, and a capped
        bucket bounds the within-bucket quadratic join).  Bucket counts
        come from ONE aggregation over all tables; what the cap drops is
-       logged driver-side and queryable via q_embed_neardup_census;
+       queryable via q_embed_neardup_census;
     3. probe each vector's own code plus its ND_PLANES single-bit flips
        (radius-1 multiprobe) against the capped frame — a single
        equi-join on (tbl, code), never all-pairs, all tables in one
@@ -1684,8 +1644,6 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     broader recall are more tables or radius-2 probing."""
     emb = _tbl(spark, sf_dir, "embeddings")
     capped = _nd_capped_codes(spark, sf_dir)
-    _log_cap_census("q_embed_neardup", _nd_bucket_counts(spark, sf_dir),
-                    "tbl", EMB_MAX_BUCKET, "vecs")
     probes = capped.select(
         "vec_id", "tbl",
         F.explode(F.array(
@@ -3993,8 +3951,7 @@ def _bloom_words(spark: SparkSession, sf_dir: str) -> list[int]:
     (session, sf_dir) with the shared mtime-stamp cache discipline —
     the build is an eager distinct+collect job over the bench grams,
     and without memoization every q_decon_bloom plan build would re-pay
-    it (the same per-invocation job class _log_cap_census was made
-    opt-in for; review finding)."""
+    it."""
     return _stamped_value(
         _BLOOM_CACHE, spark, "decon_bloom", sf_dir, "documents",
         lambda: _pack_bloom_words(_gram_frame(

@@ -6,10 +6,10 @@ north_rule scale features (SURVEY.md §4 O11/O12, §7.6):
   ``warc_dt=date(warc_ts)`` (parquet stand-in for the Iceberg table);
   day-range filters prune directories at plan time (verified via
   ``PartitionFilters`` in tests).
-* **salted repartition** — documents are redistributed by
-  ``pmod(xxhash64(url), SALT_BUCKETS)`` before the extraction stage so a
-  mega-host's pages (Zipf skew) spread across tasks instead of landing in
-  one input split.
+* **salted repartition** — with ``salt=True``, documents are
+  redistributed by the raw ``xxhash64(url)`` before the extraction stage
+  so a mega-host's pages (Zipf skew) spread across tasks instead of
+  landing in one input split.
 * **checkpoint manifests + resume** — each run writes its output under
   ``data/run_id=<id>/`` and then commits a manifest recording per-input-file
   lineage and metrics ``(input_file, rows, bytes_out, n_partitions,
@@ -34,7 +34,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import SALT_BUCKETS  # noqa: F401 (kept for config docs)
 from ..operators.extract import extract_documents
 
 MANIFEST_SCHEMA = ("run_id string, input_file string, rows long, "
@@ -235,11 +234,11 @@ def salt_repartition(df: DataFrame, n_partitions: int) -> DataFrame:
     """Spread skewed hosts: repartition on the full-url 64-bit hash (O11).
     Deterministic w.r.t. data, independent of input file layout.
 
-    The salt key space must be >> n_partitions: with only SALT_BUCKETS
-    distinct salts, hashing #buckets values into #partitions leaves some
-    partitions with 2-3 buckets (balls-in-bins), and the slowest task then
-    bounds the whole stage — measured as a 3x wall regression at
-    local[32].  xxhash64(url) gives 2^64 salts, so every partition draws
+    The salt key space must be >> n_partitions: with a small modulus,
+    hashing #buckets values into #partitions leaves some partitions with
+    2-3 buckets (balls-in-bins), and the slowest task then bounds the
+    whole stage — measured as a 3x wall regression at local[32].
+    xxhash64(url) gives 2^64 salts, so every partition draws
     ~rows/n_partitions documents regardless of host skew."""
     salt = F.xxhash64("url").alias("_salt")
     return (

@@ -132,17 +132,6 @@ def _sessions_user_wm(key, pdfs, state, idle_horizon_ms):
         yield pd.DataFrame(closed, columns=_COLS)
 
 
-def stateful_sessionize_wm(events: "DataFrame",
-                           watermark: str = "10 minutes",
-                           idle_horizon_ms: int | None = None,
-                           ) -> "DataFrame":
-    """Back-compat alias for the watermark path — equivalent to
-    ``stateful_sessionize(events, watermark=watermark, ...)``, which is
-    now the default mode."""
-    return stateful_sessionize(events, watermark=watermark,
-                               idle_horizon_ms=idle_horizon_ms)
-
-
 def stateful_sessionize(events: "DataFrame",
                         watermark: str | None = "10 minutes",
                         idle_horizon_ms: int | None = None,

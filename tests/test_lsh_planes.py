@@ -147,19 +147,16 @@ def test_code_udf_matches_relational_shadow(spark):
         assert udf == col
 
 
-def test_cap_census_log_is_opt_in_no_plan_build_job(spark, skewed_dir,
-                                                    monkeypatch):
-    """Building the candidate plans must not fire ANY Spark job by
-    default (round-3 verdict item 6: the eager census collect at
-    plan-build time is an extra job per invocation at 100 TB).  With
-    the env flag set, the log path runs again."""
+def test_warm_candidate_plan_build_fires_no_job(spark, skewed_dir):
+    """Building the candidate plans must not fire ANY Spark job
+    (round-3 verdict item 6: an eager census collect at plan-build time
+    is an extra job per invocation at 100 TB)."""
     jobs = lambda: spark.sparkContext._jsc.sc().dagScheduler() \
         .nextJobId()  # noqa: E731  (py4j unboxes the AtomicInteger)
 
-    monkeypatch.delenv(dq.CAP_CENSUS_LOG_ENV, raising=False)
     # warm the per-session reader/signature caches (first build pays
     # the parquet schema-inference jobs once), then assert a WARM plan
-    # build fires ZERO jobs — any job here could only be the census
+    # build fires ZERO jobs — any job here could only be an eager
     # collect or a cache regression
     dq.q_minhash_dup_candidates(spark, "/root/testdata/sf0.001")
     dq.q_embed_neardup(spark, skewed_dir)
@@ -167,7 +164,3 @@ def test_cap_census_log_is_opt_in_no_plan_build_job(spark, skewed_dir,
     dq.q_minhash_dup_candidates(spark, "/root/testdata/sf0.001")
     dq.q_embed_neardup(spark, skewed_dir)
     assert jobs() == before
-
-    monkeypatch.setenv(dq.CAP_CENSUS_LOG_ENV, "1")
-    dq.q_embed_neardup(spark, skewed_dir)
-    assert jobs() > before

@@ -26,9 +26,6 @@ LIBRARY_SURFACES = {
         "streaming twin of the extraction job (stream==batch tests)",
     f"{PKG}.streaming.stateful_sessions":
         "streaming twin of q_sessionize (stream==batch tests)",
-    f"{PKG}.functions.jpeg_codec":
-        "what remains of the removed media decode stack; due for deletion "
-        "with test_jpeg_codec/test_arith_jpeg/test_hier_jpeg (ROADMAP C)",
 }
 
 

@@ -16,7 +16,7 @@ from ocr_hardsubx_spark.streaming.stateful_dedup import (
     batch_host_dedup, stateful_host_dedup,
 )
 from ocr_hardsubx_spark.streaming.stateful_sessions import (
-    stateful_sessionize_wm,
+    stateful_sessionize,
 )
 from ocr_hardsubx_spark.streaming.watermark import watermark_drop_census
 from tests.conftest import drain_stream
@@ -157,7 +157,7 @@ def test_sessions_shuffled_delivery_equals_batch_with_straggler_census(
     ]
     got, dropped = _run_rounds(
         spark, tmp_path,
-        lambda s: stateful_sessionize_wm(s, watermark="2 hours"),
+        lambda s: stateful_sessionize(s, watermark="2 hours"),
         EVENTS_SCHEMA, rounds)
     assert dropped == 1
     emitted = {(r["user_id"], r["session_no"]):
