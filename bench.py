@@ -388,8 +388,8 @@ scheduling, GIL, shuffle, or Python-worker overheads (SURVEY.md §4
 O6/O10/O11).
 
 The job is one fused vectorized stage with zero shuffles (scan splits
-are byte-balanced via maxPartitionBytes; salting available for
-pathological layouts / downstream host-keyed stages).
+are sized by `pipeline._local_scan_conf`, see below; salting available
+for pathological layouts / downstream host-keyed stages).
 
 """)
         if extra:

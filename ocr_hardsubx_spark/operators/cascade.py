@@ -69,22 +69,24 @@ def profile_gradient(profiles: list[float]) -> tuple[float, float]:
 
 def feature_matrix(regions: list[Region], inline_events: list[int]) -> np.ndarray:
     """(n_regions, 7) float64 feature matrix; columns per model_store spec.
-    Stage 1 uses X[:, :4], stage 2 the full matrix."""
-    n = len(regions)
-    X = np.empty((n, 7), dtype=np.float64)
-    for i, r in enumerate(regions):
-        perimeter = 2 * r.n_elements
-        raw_span = max(1, r.raw_span)
-        X[i, 0] = r.area / max(1, perimeter)
-        X[i, 1] = r.link_area / max(1, r.area)
-        X[i, 2] = 1.0 - r.islands
-        # med_crossings is 0 for the (common) regions with no inline events
-        X[i, 3] = (_med_crossings_sampled(r, inline_events)
-                   if r.ev_end > r.ev_start else 0.0)
-        X[i, 4] = r.skipped_chars / raw_span
-        X[i, 5] = r.area / raw_span
-        X[i, 6] = num_inflexions(r.child_profiles)
-    return X
+    Stage 1 uses X[:, :4], stage 2 the full matrix.  One tuple per region
+    and one ``np.array`` call: region counts are never negative, so
+    ``x or 1`` is ``max(1, x)``."""
+    rows = [
+        (r.area / (2 * r.n_elements or 1),           # area / perimeter
+         r.link_area / (r.area or 1),
+         1.0 - r.islands,
+         # med_crossings is 0 for the (common) regions with no inline events
+         _med_crossings_sampled(r, inline_events)
+         if r.ev_end > r.ev_start else 0.0,
+         r.skipped_chars / (r.raw_end - r.raw_start or 1),
+         r.area / (r.raw_end - r.raw_start or 1),
+         # fewer than three profiles have no sign change to count
+         num_inflexions(r.child_profiles) if len(r.child_profiles) > 2
+         else 0.0)
+        for r in regions
+    ]
+    return np.array(rows, dtype=np.float64).reshape(len(rows), 7)
 
 
 def _med_crossings_sampled(r: Region, inline_events: list[int]) -> float:
@@ -175,23 +177,28 @@ def nms_with_forest(regions: list[Region], accepted_idx: np.ndarray,
     kept region, its direct children in the accepted forest become
     candidates in its place.
     """
-    kept = nonmax_suppression(regions, accepted_idx, prob)
-    children = _spliced_children(regions, accepted_idx)
-    return kept, children
+    roots, children = _accepted_forest(regions, accepted_idx)
+    return _nms(roots, children, accepted_idx, prob), children
 
 
-def _spliced_children(regions: list[Region],
-                      accepted_idx: np.ndarray) -> dict[int, list[int]]:
-    acc = set(int(i) for i in accepted_idx)
-    by_id = {r.region_id: r for r in regions}
+def _accepted_forest(regions: list[Region], accepted_idx: np.ndarray
+                     ) -> tuple[list[int], dict[int, list[int]]]:
+    """Roots and children map of the accepted forest: rejected regions
+    are spliced out, so each accepted region's parent is its nearest
+    accepted ancestor (er_merge child-splicing analog, erfilter.c:847-862).
+    ``regions`` is indexed by region id (``parse_document`` guarantees
+    ``regions[i].region_id == i``)."""
     children: dict[int, list[int]] = {int(i): [] for i in accepted_idx}
-    for i in accepted_idx:
-        p = by_id[int(i)].parent_id
-        while p != -1 and p not in acc:
-            p = by_id[p].parent_id
-        if p != -1:
-            children[p].append(int(i))
-    return children
+    roots: list[int] = []
+    for i in children:
+        p = regions[i].parent_id
+        while p != -1 and p not in children:
+            p = regions[p].parent_id
+        if p == -1:
+            roots.append(i)
+        else:
+            children[p].append(i)
+    return roots, children
 
 
 def stage2_with_recovery(kept_ids: list[int], children: dict[int, list[int]],
@@ -200,7 +207,6 @@ def stage2_with_recovery(kept_ids: list[int], children: dict[int, list[int]],
     """Stage-2 gate with child splicing: a rejected region's accepted-
     forest children are re-tested in its place (bounded by tree depth).
     Returns surviving Regions with probability set."""
-    by_id = {r.region_id: r for r in regions}
     survivors: list[Region] = []
     queue = list(kept_ids)
     seen = set(queue)
@@ -210,7 +216,7 @@ def stage2_with_recovery(kept_ids: list[int], children: dict[int, list[int]],
         next_queue: list[int] = []
         for rid, ok, pp in zip(queue, mask, p):
             if ok:
-                r = by_id[rid]
+                r = regions[rid]
                 r.probability = float(pp)
                 survivors.append(r)
             else:
@@ -249,24 +255,12 @@ def nonmax_suppression(regions: list[Region], accepted_idx: np.ndarray,
       where the reference clears only a flagged direct parent — with
       spliced chains the previous max need not be the direct parent.
     """
-    if len(accepted_idx) == 0:
-        return []
-    acc = set(int(i) for i in accepted_idx)
-    by_id = {r.region_id: r for r in regions}
-    # splice: nearest accepted ancestor
-    parent_of: dict[int, int] = {}
-    for i in accepted_idx:
-        p = by_id[int(i)].parent_id
-        while p != -1 and p not in acc:
-            p = by_id[p].parent_id
-        parent_of[int(i)] = p
-    children: dict[int, list[int]] = {int(i): [] for i in accepted_idx}
-    roots = []
-    for i, p in parent_of.items():
-        if p == -1:
-            roots.append(i)
-        else:
-            children[p].append(i)
+    roots, children = _accepted_forest(regions, accepted_idx)
+    return _nms(roots, children, accepted_idx, prob)
+
+
+def _nms(roots: list[int], children: dict[int, list[int]],
+         accepted_idx: np.ndarray, prob: np.ndarray) -> list[int]:
     pr = {int(i): float(prob[k]) for k, i in enumerate(accepted_idx)}
 
     flag: dict[int, bool] = {}

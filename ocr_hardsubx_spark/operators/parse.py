@@ -333,8 +333,11 @@ def parse_document(html: bytes | str) -> tuple[list[Region], str, list[int]]:
     """Parse one page; return (regions in preorder, document text stream,
     inline-tag line events).
 
-    regions[0] is the #document root.  Offsets (start/end) index into the
-    returned stream; region subtree text == stream[r.start : r.end].
+    regions[0] is the #document root, and ``regions[i].region_id == i``
+    (ids are assigned in preorder as regions open, so a parent precedes
+    its children): the cascade indexes ``regions`` by id.  Offsets
+    (start/end) index into the returned stream; region subtree text ==
+    stream[r.start : r.end].
     """
     if isinstance(html, bytes):
         html = html.decode("utf-8", errors="replace")

@@ -3793,33 +3793,34 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Relational end to end: one explode -> per-(doc, term) tf filtered
     to the query terms (the explode output shrinks to |terms| rows per
-    doc BEFORE the shuffle), df per term (tiny, broadcast back), the
-    corpus-average document length as a 1-row broadcast, then the
-    standard Robertson idf x saturated-tf formula and a deterministic
-    rounded top-10.  At 100 TB the same plan serves any query whose
-    term list fits a broadcast — which is every query."""
+    doc BEFORE the shuffle), the document count, corpus-average length
+    and df per term as one 1-row broadcast, then the standard Robertson
+    idf x saturated-tf formula and a deterministic rounded top-10.  At
+    100 TB the same plan serves any query whose term list fits a
+    broadcast — which is every query."""
     docs = _tbl(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.size(F.split("text", " ")).alias("dl"),
-        F.explode(F.split("text", " ")).alias("w"))
+    words = F.split("text", " ")
+    toks = docs.select("doc_id", F.size(words).alias("dl"),
+                       F.explode(words).alias("w"))
     hits = (toks.where(F.col("w").isin(*BM25_QUERY_TERMS))
             .groupBy("doc_id", "dl", "w")
-            .agg(F.count("*").alias("tf"))
-            # hits feeds df_t AND the scored join; without this the
-            # token explode runs twice in one job (shared-subtree
-            # discipline) — hits is <= |query terms| rows per doc
-            .localCheckpoint())
-    n_docs = docs.agg(F.count("*").alias("n"),
-                      F.avg(F.size(F.split("text", " "))).alias("avgdl"))
-    df_t = (hits.groupBy("w").agg(F.countDistinct("doc_id").alias("df")))
-    idf = F.log(
-        (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+            .agg(F.count("*").alias("tf")))
+    # corpus stats in one 1-row aggregate: doc count, average length and
+    # each query term's document frequency (documents holds one row per
+    # doc_id), so hits is read once, with no df self-join (which would
+    # run the token explode twice) and no eager checkpoint
+    stats = docs.agg(
+        F.count("*").alias("n"), F.avg(F.size(words)).alias("avgdl"),
+        *(F.sum(F.array_contains(words, t).cast("long")).alias(f"df_{t}")
+          for t in BM25_QUERY_TERMS))
+    df = F.create_map(*(c for t in BM25_QUERY_TERMS
+                        for c in (F.lit(t), F.col(f"df_{t}"))))[F.col("w")]
+    idf = F.log((F.col("n") - df + 0.5) / (df + 0.5) + 1.0)
     sat = (F.col("tf") * (BM25_K1 + 1)
            / (F.col("tf") + BM25_K1
               * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))))
     scored = (
-        hits.join(F.broadcast(df_t), "w")
-        .crossJoin(F.broadcast(n_docs))
+        hits.crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
         .agg(F.round(F.sum(idf * sat), 4).alias("bm25"),
              F.count("*").alias("n_matched_terms"))

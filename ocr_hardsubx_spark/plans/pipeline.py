@@ -270,14 +270,18 @@ def run_extraction_job(
     ``max_files`` limits this run's slice (used by tests to simulate a
     killed job; a real deployment uses it for incremental backfill).
 
-    ``salt``: the extraction stage's cost is proportional to input BYTES,
-    and scan splits are byte-balanced by construction (maxPartitionBytes),
-    so the map stage needs no exchange even under Zipf host skew — the
-    skew lives in row counts per host, not bytes per split.  Enable
-    salting when the upstream layout is pathological (e.g. one giant
-    unsplittable file per host) or when a downstream host-keyed stage
-    follows; it repartitions on xxhash64(url) (O11) at the cost of
-    shuffling the full html payload once.
+    ``salt``: the extraction stage's cost is proportional to input BYTES.
+    Local inputs are sized by ``_local_scan_conf``: files larger than a
+    task's share are split into byte ranges, smaller ones are packed a
+    whole number of files to a task, so a task's bytes are balanced only
+    as far as the file sizes allow.  Under Zipf host skew that is still
+    enough — the skew lives in row counts per host, not bytes per file —
+    so the map stage needs no exchange.  Enable salting when the
+    upstream layout is pathological (e.g. one giant unsplittable file
+    per host, or day files of very different sizes) or when a
+    downstream host-keyed stage follows; it repartitions on
+    xxhash64(url) (O11) at the cost of shuffling the full html payload
+    once.
     """
     t0 = time.time()
     pending = pending_input_files(spark, input_path, output_path, day_range)
@@ -289,27 +293,67 @@ def run_extraction_job(
         n_partitions = spark.sparkContext.defaultParallelism * 4
 
     local_inputs = all(os.path.exists(_norm_path(f)) for f in pending)
-    # size scan splits so the stage gets ~n_partitions byte-balanced tasks;
     # remote inputs get the explicit Spark default back so they never
     # inherit a tiny split size left behind by a previous local run in the
     # same session (review finding)
     if local_inputs:
-        total_bytes = sum(os.path.getsize(_norm_path(f)) for f in pending)
-        split = max(1 << 20,
-                    min(128 << 20, total_bytes // max(1, n_partitions)))
+        scan_conf = _local_scan_conf(
+            [os.path.getsize(_norm_path(f)) for f in pending],
+            spark.sparkContext.defaultParallelism, n_partitions)
     else:
-        split = 128 << 20
+        scan_conf = {"spark.sql.files.maxPartitionBytes": str(_MAX_SPLIT)}
     # session-global conf: save and restore on exit so a pipeline run can
     # never poison later non-pipeline queries in the same session with a
     # tiny split size (round-2 verdict item 5)
-    prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    prev_conf = {k: spark.conf.get(k) for k in scan_conf}
+    for k, v in scan_conf.items():
+        spark.conf.set(k, v)
     try:
         return _run_extraction_job_inner(
             spark, pending, output_path, day_range, n_partitions, salt,
             local_inputs, t0, partition_by_day)
     finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
+        for k, v in prev_conf.items():
+            spark.conf.set(k, v)
+
+
+_MIN_SPLIT = 1 << 20    # a task's least share of the input bytes
+_MAX_SPLIT = 128 << 20  # Spark's default maxPartitionBytes
+
+
+def _local_scan_conf(sizes: list[int], cores: int,
+                     n_partitions: int) -> dict[str, str]:
+    """Scan conf for local input files of ``sizes`` bytes: at most
+    ``n_partitions`` tasks of at least 1 MB each, in whole waves of
+    ``cores`` tasks, and never fewer than ``min(len(sizes), cores)``.
+
+    Every task pays a fixed set-up (~0.13 core-s at ``local[4]``: task
+    deserialization, the Arrow stream to the Python worker, one output
+    file), so small files must share tasks.  Spark charges each file
+    ``openCostInBytes`` (4 MB by default) when it packs, which alone
+    would leave every file under ~4 MB a task of its own.  When a task
+    must take several files, the open cost goes to 0 and the split
+    holds ``per_task`` of the largest files: Spark packs size-sorted
+    files next-fit, so each task takes at least ``per_task`` files.
+    Spark also caps the split at total bytes / ``minPartitionNum`` (the
+    core count, see ``session.get_spark``); where that cap binds (file
+    sizes far apart, or files that do not fill one wave evenly) the
+    stage runs a few more, smaller tasks.
+    Otherwise files are split into byte ranges of the task's share, as
+    large inputs always were.
+    """
+    total = sum(sizes)
+    tasks = min(n_partitions, total // _MIN_SPLIT) // cores * cores
+    tasks = max(tasks, min(len(sizes), cores), 1)
+    per_task = -(-len(sizes) // tasks)
+    if per_task > 1:
+        return {
+            "spark.sql.files.maxPartitionBytes":
+                str(min(_MAX_SPLIT, per_task * max(sizes))),
+            "spark.sql.files.openCostInBytes": "0",
+        }
+    split = max(_MIN_SPLIT, min(_MAX_SPLIT, total // max(1, n_partitions)))
+    return {"spark.sql.files.maxPartitionBytes": str(split)}
 
 
 def _run_extraction_job_inner(spark, pending, output_path, day_range,

@@ -10,7 +10,12 @@ from ocr_hardsubx_spark.operators.cascade import (
     stage1_gate,
     stage2_gate,
 )
-from ocr_hardsubx_spark.operators.parse import Region, parse_document
+from ocr_hardsubx_spark.operators.parse import (
+    Region,
+    med_crossings,
+    parse_document,
+    region_crossings,
+)
 from ocr_hardsubx_spark.sources.model_store import build_nm1, build_nm2
 
 
@@ -121,14 +126,58 @@ def test_nms_forest_roots_default_kept():
     assert kept == [0, 1]
 
 
+def _reference_features(regions, ev):
+    """feature_matrix written one element at a time, with the unsampled
+    crossings formulation."""
+    X = np.empty((len(regions), 7))
+    for i, r in enumerate(regions):
+        raw_span = max(1, r.raw_span)
+        X[i, 0] = r.area / max(1, 2 * r.n_elements)
+        X[i, 1] = r.link_area / max(1, r.area)
+        X[i, 2] = 1.0 - r.islands
+        X[i, 3] = med_crossings(region_crossings(r, ev))
+        X[i, 4] = r.skipped_chars / raw_span
+        X[i, 5] = r.area / raw_span
+        X[i, 6] = num_inflexions(r.child_profiles)
+    return X
+
+
+FEATURE_PAGES = {
+    "empty": "",
+    "raw_span_0": "<body><div></div><p>text here</p><span></span></body>",
+    "inline_events": ("<body><p>a <b>bold</b> and <i>it</i><br>line two "
+                      "<a href='/'>link</a> <em>x</em><br><code>y</code>"
+                      "<br>four</p><script>var s = 1;</script></body>"),
+    "block_children": (
+        "<body><div><p>first paragraph with plenty of prose words here</p>"
+        "<ul><li><a href='/'>nav one</a></li><li><a href='/'>nav two</a>"
+        "</li></ul><p>second paragraph with plenty of prose words too</p>"
+        "<ul><li><a href='/'>nav three</a></li></ul>"
+        "<p>third paragraph</p></div></body>"),
+}
+
+
 def test_feature_matrix_end_to_end_shapes():
-    regions, _, ev = parse_document(
-        "<body><p>text here</p><ul><li><a href='/'>x</a></li></ul></body>")
-    X = feature_matrix(regions, ev)
-    assert X.shape == (len(regions), 7)
-    mask2, p2 = stage2_gate(X, build_nm2())
-    assert mask2.shape == (len(regions),)
-    assert ((p2 >= 0) & (p2 <= 1)).all()
+    reached = set()
+    for name, html in FEATURE_PAGES.items():
+        regions, _, ev = parse_document(html)
+        X = feature_matrix(regions, ev)
+        assert X.shape == (len(regions), 7) and X.dtype == np.float64
+        assert np.array_equal(X, _reference_features(regions, ev)), name
+        mask2, p2 = stage2_gate(X, build_nm2())
+        assert mask2.shape == (len(regions),)
+        assert ((p2 >= 0) & (p2 <= 1)).all()
+        if len(regions) == 1:
+            reached.add("empty")
+        if any(r.raw_span == 0 for r in regions):
+            reached.add("raw_span_0")
+        if (X[:, 3] > 0).any():
+            reached.add("inline")
+        if (X[:, 6] > 0).any():
+            reached.add("inflexion")
+    # every edge the reference is compared on was actually reached
+    assert reached == {"empty", "raw_span_0", "inline", "inflexion"}
+    assert feature_matrix([], []).shape == (0, 7)
 
 
 def test_stage2_recovery_rescues_children_of_rejected_container():

@@ -1,8 +1,11 @@
 """DOM region-tree extraction: structure + incremental features (D5/D6/D7)."""
 
+import pytest
+
 from ocr_hardsubx_spark.operators.parse import (
     med_crossings,
     parse_document,
+    parse_document_stdlib,
     region_crossings,
 )
 
@@ -148,3 +151,23 @@ def _is_desc(q, r, by_id):
             return True
         p = by_id[p].parent_id
     return False
+
+
+@pytest.mark.parametrize("parse", [parse_document, parse_document_stdlib])
+def test_region_ids_are_list_positions(parse):
+    """The cascade indexes ``regions`` by region id: both tokenizer
+    drivers must return ``regions[i].region_id == i``, with every parent
+    before its children, on clean, malformed and empty pages."""
+    pages = [
+        "",
+        "plain text, no tags",
+        "<html><body><div><p>a</p><p>b<b>c</b></p></div></body></html>",
+        "<div><p>unclosed <li>item<li>item</div></span><p>stray end",
+        "<body><br><img src=x><script>x < y</script><ul><li>z</ul></body>",
+        "<div>" * 40 + "deep" + "</div>" * 40,
+    ]
+    for html in pages:
+        regions, _, _ = parse(html)
+        assert [r.region_id for r in regions] == list(range(len(regions)))
+        assert regions[0].parent_id == -1
+        assert all(-1 < r.parent_id < r.region_id for r in regions[1:])

@@ -181,23 +181,75 @@ def test_unreachable_uri_raises_not_empty(spark):
         list_input_files("nosuchfs://bucket/prefix", spark)
 
 
-def test_max_partition_bytes_restored_after_run(spark, corpus, tmp_path):
-    """run_extraction_job sizes scan splits via a session-global conf; it
-    must restore the previous value on exit so later queries in the same
-    session never inherit a tiny local split size (round-2 verdict)."""
-    key = "spark.sql.files.maxPartitionBytes"
-    before = spark.conf.get(key)
-    run_extraction_job(spark, corpus, str(tmp_path / "out"))
-    assert spark.conf.get(key) == before
-    # and on the error path too: a bogus day_range resume raises, but
-    # that happens before the conf is touched; force the inner path by
-    # setting a sentinel and running a no-op resume
-    spark.conf.set(key, "77777777")
+SCAN_CONF_KEYS = ("spark.sql.files.maxPartitionBytes",
+                  "spark.sql.files.openCostInBytes")
+
+
+def test_max_partition_bytes_restored_after_run(spark, corpus, tmp_path,
+                                                monkeypatch):
+    """run_extraction_job sizes scan splits via session-global confs; it
+    must restore every one of them on exit, normal or not, so later
+    queries in the same session never inherit a tiny local split size or
+    a zero open cost (round-2 verdict)."""
+    from ocr_hardsubx_spark.plans import pipeline
+
+    def current():
+        return {k: spark.conf.get(k) for k in SCAN_CONF_KEYS}
+
+    sizes = [os.path.getsize(f) for f in list_input_files(corpus)]
+    cores = spark.sparkContext.defaultParallelism
+    # the corpus's day files are small, so the run sets every key
+    assert set(pipeline._local_scan_conf(sizes, cores, cores * 4)) == set(
+        SCAN_CONF_KEYS)
+    before = current()
+    sentinels = {k: str(77777777 + i) for i, k in enumerate(SCAN_CONF_KEYS)}
     try:
+        for k, v in sentinels.items():
+            spark.conf.set(k, v)
+        run_extraction_job(spark, corpus, str(tmp_path / "out"))
+        assert current() == sentinels
         run_extraction_job(spark, corpus, str(tmp_path / "out"))  # no-op
-        assert spark.conf.get(key) == "77777777"
+        assert current() == sentinels
+
+        def boom(*a, **kw):
+            assert current() != sentinels  # the run's own sizing is live
+            raise RuntimeError("inner failure")
+
+        monkeypatch.setattr(pipeline, "_run_extraction_job_inner", boom)
+        with pytest.raises(RuntimeError, match="inner failure"):
+            run_extraction_job(spark, corpus, str(tmp_path / "out2"))
+        assert current() == sentinels
     finally:
-        spark.conf.set(key, before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def test_small_files_pack_into_core_sized_tasks(spark, corpus, tmp_path):
+    """Small local files share tasks: N files well under the 4 MB open
+    cost used to run as N tasks.  A non-partitioned write leaves one part
+    file per task, so part files count the extraction stage's tasks: at
+    most n_partitions, at least min(N, cores), and every row once."""
+    import pyarrow.parquet as pq
+
+    n_files = 20
+    table = pq.read_table(corpus).drop_columns(["warc_dt"])
+    src = tmp_path / "small"
+    src.mkdir()
+    step = -(-table.num_rows // n_files)
+    for i in range(n_files):
+        pq.write_table(table.slice(i * step, step),
+                       str(src / f"part-{i:02d}.parquet"))
+    cores = spark.sparkContext.defaultParallelism
+    n_partitions = cores * 4  # the job's default
+    assert n_files > n_partitions  # one task per file breaks the bound
+    out = str(tmp_path / "out")
+    r = run_extraction_job(spark, str(src), out)
+    assert r["files"] == n_files and r["rows"] == N_DOCS
+    parts = [f for f in os.listdir(os.path.join(out, "data",
+                                                f"run_id={r['run_id']}"))
+             if f.startswith("part-")]
+    assert min(n_files, cores) <= len(parts) <= n_partitions
+    assert read_extracted(spark, out).count() == N_DOCS
 
 
 def test_uri_output_manifests_and_resume(spark, corpus, tmp_path):
