@@ -58,7 +58,6 @@ __all__ = [
     "PdfDocument",
     "extract_spans",
     "page_lines",
-    "page_text",
     "extract_text",
     "strip_furniture",
     "write_pdf",
@@ -1037,10 +1036,6 @@ def page_lines(spans: list[dict]) -> list[dict]:
         out.append({"y": ln["y"], "x": parts[0]["x"],
                     "size": max(s["size"] for s in parts), "text": text})
     return out
-
-
-def page_text(spans: list[dict]) -> str:
-    return "\n".join(ln["text"] for ln in page_lines(spans))
 
 
 _PAGE_NUM_RE = re.compile(r"^\s*(?:page\s+)?\d+(?:\s+of\s+\d+)?\s*$",

@@ -21,10 +21,12 @@ from ..config import DEDUP_SIM_THRESHOLD
 from ..functions.levenshtein import at_least_as_similar
 
 
-def dedup_consecutive(texts: list[str]) -> list[int]:
-    """Return indices of kept blocks, in order."""
+def dedup_consecutive(texts: list[str],
+                      prev_text: str | None = None) -> list[int]:
+    """Return indices of kept blocks, in order.  ``prev_text`` is the
+    previously kept block of a chain carried in from earlier input (the
+    streaming per-host dedup); None starts a fresh chain."""
     kept: list[int] = []
-    prev_text: str | None = None
     for i, t in enumerate(texts):
         if not t:
             continue

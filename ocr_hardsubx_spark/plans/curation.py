@@ -35,13 +35,16 @@ manifest) are invisible to readers and harmless on disk.
 from __future__ import annotations
 
 import os
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_hardsubx_spark.plans import dataset_queries as dq
-from ocr_hardsubx_spark.plans.pipeline import _commit_manifest, _is_uri
+from ocr_hardsubx_spark.plans.pipeline import (
+    _commit_manifest, _manifest_files,
+)
 
 CURATION_STAGES = ("1_raw", "2_url", "3_gopher", "4_repetition", "5_c4",
                    "6_near_dedup", "7_quality")
@@ -157,7 +160,9 @@ def run_curation_job(spark: SparkSession, input_dir: str,
 
     surv, census = _survivors(spark, input_dir)
     laid = _shard_layout(surv, n_shards)
-    run_id = uuid.uuid4().hex[:16]
+    # fixed-width hex milliseconds first, so run ids (and their
+    # manifests) sort in commit order; the random tail breaks ties
+    run_id = f"{time.time_ns() // 1_000_000:012x}{uuid.uuid4().hex[:8]}"
     data_dir = os.path.join(output_path, "data", f"run_id={run_id}")
     (laid.repartition("shard").sortWithinPartitions("shard", "pos")
      .write.partitionBy("shard").parquet(data_dir))
@@ -176,21 +181,11 @@ def run_curation_job(spark: SparkSession, input_dir: str,
 
 def committed_curation_runs(spark: SparkSession,
                             output_path: str) -> list[dict]:
-    """Committed runs, newest manifest last; torn runs (data without a
-    manifest) never appear."""
-    mdir = os.path.join(output_path, "_manifests")
-    if _is_uri(output_path):  # pragma: no cover - URI outputs via Hadoop
-        from ocr_hardsubx_spark.plans.pipeline import _manifest_files
-
-        files = _manifest_files(spark, output_path)
-    else:
-        if not os.path.isdir(mdir):
-            return []
-        files = sorted(
-            os.path.join(mdir, f) for f in os.listdir(mdir)
-            if f.endswith(".parquet"))
+    """Committed runs, newest manifest last (run ids sort in commit
+    order); torn runs (data without a manifest, or a manifest that does
+    not parse) never appear."""
     out = []
-    for f in files:
+    for f in _manifest_files(spark, output_path):
         df = spark.read.parquet(f)
         head = df.limit(1).collect()[0]
         out.append({"run_id": head["run_id"],

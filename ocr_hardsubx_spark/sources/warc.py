@@ -273,32 +273,31 @@ def build_wet_blob(records, gzip_compress: bool = True) -> bytes:
     return gzip.compress(data, mtime=0) if gzip_compress else data
 
 
+def parse_files(it):
+    """mapInPandas body shared by the batch and streaming WARC readers:
+    binaryFile ``content`` batches -> (url, warc_ts, html, lang) rows."""
+    import pandas as pd
+
+    for pdf in it:
+        rows = []
+        for blob in pdf["content"]:
+            for url, ts, html in parse_warc_records(bytes(blob)):
+                try:
+                    when = pd.Timestamp(ts)
+                except ValueError:     # unparseable WARC-Date: skip
+                    continue
+                rows.append((url, when, html, None))
+        yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "lang"])
+
+
 def read_documents_warc(spark: "SparkSession", path: str) -> "DataFrame":
     """Directory/glob of WARC files -> (url, warc_ts, html, lang) frame
     with the same schema/semantics as the parquet and JSONL sources
     (lang rides NULL — WARC carries no language annotation; lang-id is
     a downstream operator, q_lang_id)."""
-    import pandas as pd
-
     from ..plans.packaging import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
-
-    def parse_files(it):
-        from ocr_hardsubx_spark.sources.warc import parse_warc_records
-
-        for pdf in it:
-            rows = []
-            for blob in pdf["content"]:
-                for url, ts, html in parse_warc_records(bytes(blob)):
-                    try:
-                        when = pd.Timestamp(ts)
-                    except ValueError:     # unparseable WARC-Date: skip
-                        continue
-                    rows.append((url, when, html, None))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "lang"])
-
     files = spark.read.format("binaryFile").load(path) \
         .select("content")
     return files.mapInPandas(parse_files, schema=WARC_PAGE_SCHEMA)

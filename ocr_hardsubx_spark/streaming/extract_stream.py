@@ -26,6 +26,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_documents
+from .stateful_dedup import HOST_RE
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -75,10 +76,7 @@ def stream_host_rates(spark: "SparkSession", input_path: str,
     """Watermarked windowed aggregation: docs per host per 10-minute
     event-time window, tolerating 30 minutes of late data."""
     docs = read_documents_stream(spark, input_path)
-    # scheme-agnostic, no trailing-slash requirement (round-2 advisory —
-    # the same fix as streaming/stateful_dedup._host_col)
-    host = F.regexp_extract("url", r"^[a-zA-Z]+://([^/?#]+)", 1) \
-        .alias("host")
+    host = F.regexp_extract("url", HOST_RE, 1).alias("host")
     agg = (
         docs.select(host, "warc_ts")
         .withWatermark("warc_ts", "30 minutes")
@@ -110,27 +108,10 @@ def read_documents_warc_stream(spark: "SparkSession",
     as the batch path, so batch and streaming share one set of
     parsing/damage guarantees; the checkpoint tracks which archives
     are done, giving exactly-once ingest across restarts."""
-    import pandas as pd
-
     from ..plans.packaging import ensure_workers_can_import
+    from ..sources.warc import WARC_PAGE_SCHEMA, parse_files
 
     ensure_workers_can_import(spark)
-
-    def parse_files(it):
-        from ocr_hardsubx_spark.sources.warc import parse_warc_records
-
-        for pdf in it:
-            rows = []
-            for blob in pdf["content"]:
-                for url, ts, html in parse_warc_records(bytes(blob)):
-                    try:
-                        when = pd.Timestamp(ts)
-                    except ValueError:
-                        continue
-                    rows.append((url, when, html, None))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "lang"])
-
     files = (
         spark.readStream.format("binaryFile")
         # streaming sources require an explicit schema; binaryFile's
@@ -142,6 +123,4 @@ def read_documents_warc_stream(spark: "SparkSession",
         .load(input_path)
         .select("content")
     )
-    from ..sources.warc import WARC_PAGE_SCHEMA
-
     return files.mapInPandas(parse_files, schema=WARC_PAGE_SCHEMA)

@@ -6,36 +6,41 @@ micro-batches.  This operator extends the HardsubX consecutive-dedup
 semantics across time per host: within each host's stream (event-time
 order), a document whose extracted text is near-identical
 (Levenshtein ratio >= DEDUP_SIM_THRESHOLD) to the host's previously kept
-document is suppressed.
+document is suppressed.  The chain itself is the kernel's
+``operators.dedup.dedup_consecutive``, seeded with the host's carried
+prefix.
 
 Implemented with ``applyInPandasWithState`` (the Structured Streaming
 escape hatch for custom stateful logic): state = the last kept document's
-normalized prefix + timestamp per host, carried across micro-batches.
-State is bounded (one row per host).  The DEFAULT is watermark mode
-(out-of-order tolerant: reorder buffer + event-time-timeout flush +
-engine-side late-drop census + event-time idle-state GC — see
-streaming/watermark.py); ``watermark=None`` opts into the in-order
-fast path for sources that replay event-time order.  NB: in the
-in-order path with a processing-time timeout pending, an availableNow
-query stays alive until the timeout fires — so that path defaults to
-NoTimeout, and its GC is opt-in via ``idle_timeout_ms``.
+normalized prefix, the last folded event time and a reorder buffer per
+host, carried across micro-batches.  One per-host fold serves both
+delivery modes.  The DEFAULT is watermark mode (out-of-order tolerant:
+reorder buffer + event-time-timeout flush + engine-side late-drop census
++ event-time idle-state GC — see streaming/watermark.py);
+``watermark=None`` folds every arrival at once (nothing is held back,
+no timeout, no state GC) for sources that replay event-time order.
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import TYPE_CHECKING
 
 import pandas as pd
 
 from ..config import DEDUP_PREFIX_CHARS, DEDUP_SIM_THRESHOLD
-from ..functions.levenshtein import at_least_as_similar
+from ..operators.dedup import dedup_consecutive
+from .watermark import (
+    WM_IDLE_HORIZON_MS, dump_buffer, load_buffer, schedule_flush, split_ready,
+)
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
 OUTPUT_SCHEMA = ("host string, url string, warc_ts timestamp, "
                  "extracted_text string, kept boolean")
-STATE_SCHEMA = "prefix string"
+STATE_SCHEMA = "prefix string, last_us long, buf string"
+_COLS = ["host", "url", "warc_ts", "extracted_text", "kept"]
 
 # scheme-agnostic, no trailing-slash requirement: http:// URLs and
 # pathless https URLs extract a real host instead of '' (round-2
@@ -43,117 +48,59 @@ STATE_SCHEMA = "prefix string"
 HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)"
 
 
-WM_STATE_SCHEMA = "prefix string, last_us long, buf string"
+def _dedup_host(watermarked, idle_horizon_ms, key, pdfs, state):
+    """Per-host function: fold the ready events in (warc_ts, url) order,
+    suppressing docs near-identical to the previously kept one.
 
-
-def _make_dedup_host(idle_timeout_ms: int | None):
-    def _dedup_host(key, pdfs, state):
-        return _dedup_host_impl(key, pdfs, state, idle_timeout_ms)
-    return _dedup_host
-
-
-def _make_dedup_host_wm(idle_horizon_ms: int):
-    def _dedup_host_wm_fn(key, pdfs, state):
-        return _dedup_host_wm(key, pdfs, state, idle_horizon_ms)
-    return _dedup_host_wm_fn
-
-
-def _dedup_host_wm(key, pdfs, state, idle_horizon_ms):
-    """Watermark-mode per-host function: fold ONLY events strictly below
-    the current watermark, in (warc_ts, url) order, buffering the rest
-    in state (see streaming/watermark.py for the disorder contract).
-    Beyond-watermark stragglers never reach this function — the engine
+    In watermark mode only events strictly below the current watermark
+    are ready; the rest wait in the state's buffer (see
+    streaming/watermark.py for the disorder contract), and
+    beyond-watermark stragglers never reach this function — the engine
     drops and counts them (watermark_drop_census).  A host idle past
     ``idle_horizon_ms`` (event time) has its state row removed — after
-    GC a refetch starts a fresh chain, the same tradeoff as the
-    in-order mode's processing-time idle_timeout_ms."""
-    from .watermark import (
-        dump_buffer, load_buffer, schedule_flush, split_ready,
-    )
-
+    GC a refetch starts a fresh chain.  Without a watermark every
+    arrival is ready at once."""
     (host,) = key
     new = (None if state.hasTimedOut
            else pd.concat(list(pdfs), ignore_index=True))
     if host == "":
-        # unparseable-host rows pass through independently, no state
-        # (mirrors the in-order operator); nothing to reorder — kept
-        # depends on no neighbor
+        # unparseable-host rows pass through independently: no shared
+        # chain, no state — unrelated URLs must never suppress each other
         if new is not None and len(new):
             kept = [bool((t or "")[:DEDUP_PREFIX_CHARS])
                     for t in new["extracted_text"]]
-            out = new.assign(host=host, kept=kept)
-            yield out[["host", "url", "warc_ts", "extracted_text", "kept"]]
+            yield new.assign(host=host, kept=kept)[_COLS]
         return
+    prev, last_us, buf = "", -1, []
     if state.exists:
-        prefix, last_us, buf_json = state.get
-        prev = prefix if prefix != "" else None
-        last_us = None if last_us is None or last_us < 0 else int(last_us)
+        prev, last_us, buf_json = state.get
         buf = load_buffer(buf_json)
-    else:
-        prev, last_us, buf = None, None, []
     if new is not None:
-        for ts, url, text in zip(new["warc_ts"], new["url"],
-                                 new["extracted_text"]):
-            buf.append([int(pd.Timestamp(ts).value) // 1000, url, text])
-    wm_ms = state.getCurrentWatermarkMs()
+        buf += [[int(pd.Timestamp(ts).value) // 1000, url, text]
+                for ts, url, text in zip(new["warc_ts"], new["url"],
+                                         new["extracted_text"])]
+    wm_ms = state.getCurrentWatermarkMs() if watermarked else None
     ready, pending = split_ready(buf, wm_ms)
     if state.hasTimedOut and not ready and not pending:
         # idle-horizon GC: the watermark passed last activity + horizon
         # with nothing buffered — drop the state row
         state.remove()
         return
-    out_rows = []
-    for ts_us, url, text in ready:
-        cur = (text or "")[:DEDUP_PREFIX_CHARS]
-        if prev is not None and at_least_as_similar(
-                cur, prev, DEDUP_SIM_THRESHOLD):
-            kept = False
-        else:
-            kept = bool(cur)
-            if cur:
-                prev = cur
-        out_rows.append((host, url, pd.Timestamp(ts_us * 1000), text, kept))
-        last_us = ts_us
-    state.update((prev if prev is not None else "",
-                  last_us if last_us is not None else -1,
-                  dump_buffer(pending)))
-    schedule_flush(state, pending, wm_ms, last_us, idle_horizon_ms)
-    if out_rows:
+    prefixes = [(text or "")[:DEDUP_PREFIX_CHARS] for _, _, text in ready]
+    kept = dedup_consecutive(prefixes, prev_text=prev or None)
+    if kept:
+        prev = prefixes[kept[-1]]
+    if ready:
+        last_us = ready[-1][0]
+    state.update((prev, last_us, dump_buffer(pending)))
+    schedule_flush(state, pending, wm_ms, None if last_us < 0 else last_us,
+                   idle_horizon_ms)
+    if ready:
+        keep = set(kept)
         yield pd.DataFrame(
-            out_rows,
-            columns=["host", "url", "warc_ts", "extracted_text", "kept"])
-
-
-def _dedup_host_impl(key, pdfs, state, idle_timeout_ms):
-    """Per-host stateful function: suppress docs near-identical to the
-    previously kept one (in warc_ts order, across micro-batches)."""
-    (host,) = key
-    prev = state.get[0] if state.exists else None
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    rows = rows.sort_values(["warc_ts", "url"], kind="mergesort")
-    if host == "":
-        # unparseable-host rows pass through independently: no shared
-        # chain, no state — unrelated URLs must never suppress each other
-        kept = [bool((t or "")[:DEDUP_PREFIX_CHARS])
-                for t in rows["extracted_text"]]
-        out = rows.assign(host=host, kept=kept)
-        yield out[["host", "url", "warc_ts", "extracted_text", "kept"]]
-        return
-    kept_flags = []
-    for text in rows["extracted_text"]:
-        cur = (text or "")[:DEDUP_PREFIX_CHARS]
-        if prev is not None and at_least_as_similar(
-                cur, prev, DEDUP_SIM_THRESHOLD):
-            kept_flags.append(False)
-        else:
-            kept_flags.append(bool(cur))
-            if cur:
-                prev = cur
-    state.update((prev if prev is not None else "",))
-    if idle_timeout_ms is not None:
-        state.setTimeoutDuration(idle_timeout_ms)
-    out = rows.assign(host=host, kept=kept_flags)
-    yield out[["host", "url", "warc_ts", "extracted_text", "kept"]]
+            [(host, url, pd.Timestamp(ts_us * 1000), text, i in keep)
+             for i, (ts_us, url, text) in enumerate(ready)],
+            columns=_COLS)
 
 
 def batch_host_dedup(extracted: "DataFrame") -> "DataFrame":
@@ -223,7 +170,6 @@ def batch_host_dedup(extracted: "DataFrame") -> "DataFrame":
 
 
 def stateful_host_dedup(extracted: "DataFrame",
-                        idle_timeout_ms: int | None = None,
                         watermark: str | None = "10 minutes",
                         idle_horizon_ms: int | None = None) -> "DataFrame":
     """extracted(url, warc_ts, extracted_text, ...) -> per-host stream with
@@ -239,13 +185,10 @@ def stateful_host_dedup(extracted: "DataFrame",
     state row removed — a later refetch starts a FRESH chain, the
     documented GC tradeoff.
 
-    Pass ``watermark=None`` to opt into the in-order fast path (a file
-    source replaying event-time order — no reorder buffer, no drops);
-    there ``idle_timeout_ms`` is the PROCESSING-TIME GC knob it always
-    was.  The two GC knobs are deliberately separate parameters and
-    each is rejected in the other's mode — a processing-time budget
-    must never be silently reinterpreted as an event-time horizon
-    (review finding).
+    Pass ``watermark=None`` for a source that replays event-time order:
+    the same fold runs on every arrival at once (no reorder buffer, no
+    drops, no timeout and so no state GC — ``idle_horizon_ms`` is
+    rejected there).
 
     Works on a streaming DataFrame (applyInPandasWithState); the unit tests
     drive it through a memory-source availableNow query.
@@ -253,8 +196,6 @@ def stateful_host_dedup(extracted: "DataFrame",
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .watermark import WM_IDLE_HORIZON_MS
 
     spark = SparkSession.getActiveSession()
     if spark is not None:
@@ -264,41 +205,25 @@ def stateful_host_dedup(extracted: "DataFrame",
 
     with_host = extracted.withColumn(
         "host", F.regexp_extract("url", HOST_RE, 1))
-    if watermark is not None:
-        if idle_timeout_ms is not None:
+    if watermark is None:
+        if idle_horizon_ms is not None:
             raise ValueError(
-                "idle_timeout_ms is the in-order mode's processing-time "
-                "GC knob; watermark mode GCs on EVENT time — pass "
-                "idle_horizon_ms (or watermark=None for in-order mode)")
-        return (
-            with_host.withWatermark("warc_ts", watermark)
-            .select("host", "url", "warc_ts", "extracted_text")
-            .groupBy("host")
-            .applyInPandasWithState(
-                _make_dedup_host_wm(
-                    idle_horizon_ms if idle_horizon_ms is not None
-                    else WM_IDLE_HORIZON_MS),
-                outputStructType=OUTPUT_SCHEMA,
-                stateStructType=WM_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    if idle_horizon_ms is not None:
-        raise ValueError(
-            "idle_horizon_ms is the watermark mode's event-time GC "
-            "horizon; the in-order fast path GCs on processing time — "
-            "pass idle_timeout_ms")
+                "idle_horizon_ms is the watermark mode's event-time GC "
+                "horizon; watermark=None has no timeout-based GC")
+        timeout = GroupStateTimeout.NoTimeout
+    else:
+        with_host = with_host.withWatermark("warc_ts", watermark)
+        timeout = GroupStateTimeout.EventTimeTimeout
+        if idle_horizon_ms is None:
+            idle_horizon_ms = WM_IDLE_HORIZON_MS
     return (
         with_host.select("host", "url", "warc_ts", "extracted_text")
         .groupBy("host")
         .applyInPandasWithState(
-            _make_dedup_host(idle_timeout_ms),
+            partial(_dedup_host, watermark is not None, idle_horizon_ms),
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
-                         if idle_timeout_ms is not None
-                         else GroupStateTimeout.NoTimeout),
+            timeoutConf=timeout,
         )
     )

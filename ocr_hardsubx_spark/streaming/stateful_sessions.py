@@ -16,15 +16,20 @@ session.  The DEFAULT mode is the watermark mode (real sources deliver
 out of order): reorder-buffer within the watermark, engine-drop (with
 an exact census) beyond it, OPT-IN idle-horizon state GC
 (tests/test_streaming_watermark.py; see stateful_sessionize on why GC
-is not defaulted here).  ``watermark=None`` opts into the
-in-order fast path for sources that replay event-time order.
+is not defaulted here).  One per-user fold serves both modes:
+``watermark=None`` (for sources that replay event-time order) folds
+every arrival at once, with nothing held back, no timeout and no
+state GC.
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import TYPE_CHECKING
 
 import pandas as pd
+
+from .watermark import dump_buffer, load_buffer, schedule_flush, split_ready
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -34,77 +39,40 @@ SESSION_GAP_US = 1800 * 1_000_000  # mirrors q_sessionize's threshold
 OUTPUT_SCHEMA = ("user_id long, session_no long, n_events long, "
                  "first_event long, last_event long")
 STATE_SCHEMA = ("session_no long, n_events long, first_event long, "
-                "last_event long, last_ts_us long")
+                "last_event long, last_ts_us long, buf string")
 
 _COLS = ["user_id", "session_no", "n_events", "first_event", "last_event"]
 
 
-def _sessions_user(key, pdfs, state):
-    """Per-user stateful fold: close sessions on gap > SESSION_GAP_US.
+def _sessions_user(watermarked, idle_horizon_ms, key, pdfs, state):
+    """Per-user fold: close sessions on gap > SESSION_GAP_US, over the
+    ready events in (ts, event_id) order.
+
+    In watermark mode only events strictly below the current watermark
+    are ready; the rest wait in the state's buffer and flush via
+    event-time timeouts (streaming/watermark.py contract), and
+    stragglers beyond the watermark are engine-dropped and counted in
+    the progress census.  A user idle past ``idle_horizon_ms`` (event
+    time) has the still-open session emitted as closed (the gap already
+    exceeds SESSION_GAP) and the state row removed — without this GC,
+    open-session rows accumulate forever under user churn.  Without a
+    watermark every arrival is ready at once.
 
     ``first_event``/``last_event`` are the MIN/MAX event ids of the
     session (the batch shadow aggregates min/max, which only equals
     first/last-in-time when ids are time-monotone — track extrema, not
     endpoints, so the contract holds either way)."""
     (user,) = key
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    rows = rows.sort_values(["ts", "event_id"], kind="mergesort")
-    if state.exists:
-        sno, n, lo, hi, last_us = state.get
-    else:
-        sno, n, lo, hi, last_us = 0, 0, 0, 0, None
-    closed = []
-    for ts, eid in zip(rows["ts"], rows["event_id"]):
-        us = int(pd.Timestamp(ts).value) // 1000
-        eid = int(eid)
-        if last_us is None or us - last_us > SESSION_GAP_US:
-            if n:
-                closed.append((user, sno, n, lo, hi))
-            sno += 1
-            n, lo, hi = 0, eid, eid
-        n += 1
-        lo, hi = min(lo, eid), max(hi, eid)
-        last_us = us
-    state.update((int(sno), int(n), int(lo), int(hi), int(last_us)))
-    yield pd.DataFrame(closed, columns=_COLS)
-
-
-WM_STATE_SCHEMA = STATE_SCHEMA + ", buf string"
-
-
-def _make_sessions_user_wm(idle_horizon_ms: int | None):
-    def _sessions_user_wm_fn(key, pdfs, state):
-        return _sessions_user_wm(key, pdfs, state, idle_horizon_ms)
-    return _sessions_user_wm_fn
-
-
-def _sessions_user_wm(key, pdfs, state, idle_horizon_ms):
-    """Watermark-mode per-user fold: reorder-buffer arrivals in state,
-    fold ONLY events strictly below the current watermark in
-    (ts, event_id) order (streaming/watermark.py contract), flush via
-    event-time timeouts.  Stragglers beyond the watermark are engine-
-    dropped and counted in the progress census.  A user idle past
-    ``idle_horizon_ms`` (event time) has the still-open session emitted
-    as closed (the gap already exceeds SESSION_GAP) and the state row
-    removed — without this GC, open-session rows accumulate forever
-    under user churn."""
-    from .watermark import (
-        dump_buffer, load_buffer, schedule_flush, split_ready,
-    )
-
-    (user,) = key
+    sno, n, lo, hi, last_us, buf = 0, 0, 0, 0, -1, []
     if state.exists:
         sno, n, lo, hi, last_us, buf_json = state.get
         buf = load_buffer(buf_json)
-        if last_us is not None and last_us < 0:
-            last_us = None                  # sentinel: nothing folded yet
-    else:
-        sno, n, lo, hi, last_us, buf = 0, 0, 0, 0, None, []
+    last_us = None if last_us < 0 else last_us  # -1: nothing folded yet
     if not state.hasTimedOut:
         rows = pd.concat(list(pdfs), ignore_index=True)
-        for ts, eid in zip(rows["ts"], rows["event_id"]):
-            buf.append([int(pd.Timestamp(ts).value) // 1000, int(eid)])
-    wm_ms = state.getCurrentWatermarkMs()
+        buf += [[int(pd.Timestamp(ts).value) // 1000, int(eid)]
+                for ts, eid in zip(rows["ts"], rows["event_id"])]
+    wm_ms = state.getCurrentWatermarkMs() if watermarked else None
     ready, pending = split_ready(buf, wm_ms)
     if state.hasTimedOut and not ready and not pending:
         # idle-horizon GC: close and emit the open session (the idle
@@ -158,8 +126,9 @@ def stateful_sessionize(events: "DataFrame",
     open-session row per user ever seen — the price of stable
     numbering.  Both behaviors are pinned in tests.
 
-    Pass ``watermark=None`` for the in-order fast path (a file source
-    replaying event-time order; no reorder buffer, no drops, no GC).
+    Pass ``watermark=None`` for a file source replaying event-time
+    order: the same fold runs on every arrival at once (no reorder
+    buffer, no drops, no GC).
 
     Works on a streaming DataFrame; unit tests drive it through a
     parquet file source with varied micro-batch slicings."""
@@ -175,32 +144,23 @@ def stateful_sessionize(events: "DataFrame",
     if watermark is None:
         if idle_horizon_ms is not None:
             raise ValueError(
-                "idle_horizon_ms is the watermark-mode GC horizon; the "
-                "in-order fast path has no timeout-based GC")
-        return (
-            events.select("user_id", "event_id", "ts")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _sessions_user,
-                outputStructType=OUTPUT_SCHEMA,
-                stateStructType=STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-    horizon = idle_horizon_ms
-    if horizon is not None:
-        # the GC close is only valid once the gap exceeds SESSION_GAP
-        horizon = max(horizon, SESSION_GAP_US // 1000 + 1)
+                "idle_horizon_ms is the watermark-mode GC horizon; "
+                "watermark=None has no timeout-based GC")
+        timeout = GroupStateTimeout.NoTimeout
+    else:
+        events = events.withWatermark("ts", watermark)
+        timeout = GroupStateTimeout.EventTimeTimeout
+        if idle_horizon_ms is not None:
+            # the GC close is only valid once the gap exceeds SESSION_GAP
+            idle_horizon_ms = max(idle_horizon_ms, SESSION_GAP_US // 1000 + 1)
     return (
-        events.withWatermark("ts", watermark)
-        .select("user_id", "event_id", "ts")
+        events.select("user_id", "event_id", "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_sessions_user_wm(horizon),
+            partial(_sessions_user, watermark is not None, idle_horizon_ms),
             outputStructType=OUTPUT_SCHEMA,
-            stateStructType=WM_STATE_SCHEMA,
+            stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            timeoutConf=timeout,
         )
     )

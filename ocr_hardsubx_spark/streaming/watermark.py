@@ -29,6 +29,7 @@ delay, not by stream length; the frontier and fold fields stay O(1).
 from __future__ import annotations
 
 import json
+import math
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:
@@ -51,12 +52,13 @@ def load_buffer(buf_json: str | None) -> list:
     return json.loads(buf_json) if buf_json else []
 
 
-def split_ready(buf: list, wm_ms: int) -> tuple[list, list]:
+def split_ready(buf: list, wm_ms: int | None) -> tuple[list, list]:
     """Partition the reorder buffer into (ready, pending): ready rows
     have event-time µs STRICTLY below the watermark (so no later
     arrival — always >= watermark — can ever precede them), sorted by
-    the buffered key order ``[ts_us, tiebreak, ...]``."""
-    wm_us = wm_ms * 1000
+    the buffered key order ``[ts_us, tiebreak, ...]``.  Without a
+    watermark (``wm_ms=None``, in-order delivery) every row is ready."""
+    wm_us = math.inf if wm_ms is None else wm_ms * 1000
     # sort by (event_time, tiebreak) only — trailing payload fields may
     # be None and must not participate in (or break) the ordering
     ready = sorted((r for r in buf if r[0] < wm_us),

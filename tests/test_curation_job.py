@@ -133,6 +133,57 @@ def test_zero_survivor_run_reads_back_empty(spark, tmp_path, monkeypatch):
     assert got.count() == 0
 
 
+def _patch_funnel(monkeypatch, fingerprint, doc_ids):
+    """Stand-in funnel: the given survivors under the given snapshot
+    fingerprint, so a test commits runs without running the operators."""
+    def survivors(spark, input_dir):
+        surv = spark.createDataFrame(
+            [(d, "en", f"doc {d}", 2) for d in doc_ids],
+            "doc_id long, lang string, text string, n_tokens long")
+        return surv, [(s, len(doc_ids), 2 * len(doc_ids))
+                      for s in curation.CURATION_STAGES]
+
+    monkeypatch.setattr(curation, "_survivors", survivors)
+    monkeypatch.setattr(curation, "_input_fingerprint",
+                        lambda docs: fingerprint)
+
+
+def test_newest_run_wins_whatever_its_random_suffix(spark, tmp_path,
+                                                    monkeypatch):
+    """Two runs over changed snapshots: readers see the run committed
+    last, even when its random id part sorts below the first run's."""
+    import uuid
+
+    descending = iter(range(2**128 - 1, 0, -2**124))
+    monkeypatch.setattr(uuid, "uuid4",
+                        lambda: uuid.UUID(int=next(descending)))
+    out = str(tmp_path / "curated")
+    _patch_funnel(monkeypatch, "snapshot-1", [1, 2])
+    first = run_curation_job(spark, SF, out)
+    _patch_funnel(monkeypatch, "snapshot-2", [3, 4, 5])
+    second = run_curation_job(spark, SF, out)
+    assert [r["run_id"] for r in committed_curation_runs(spark, out)] == [
+        first["run_id"], second["run_id"]]
+    assert sorted(r["doc_id"] for r in read_curated(spark, out).collect()
+                  ) == [3, 4, 5]
+
+
+def test_truncated_manifest_reads_as_uncommitted(spark, tmp_path,
+                                                 monkeypatch):
+    """A manifest cut short (a torn copy+delete rename on an object
+    store) is not a committed run: readers skip it instead of raising,
+    and a re-run over the same snapshot commits again."""
+    _patch_funnel(monkeypatch, "snapshot-1", [1, 2])
+    out = str(tmp_path / "curated")
+    run_curation_job(spark, SF, out)
+    mdir = os.path.join(out, "_manifests")
+    (manifest,) = [os.path.join(mdir, f) for f in os.listdir(mdir)]
+    with open(manifest, "r+b") as f:
+        f.truncate(os.path.getsize(manifest) // 2)
+    assert committed_curation_runs(spark, out) == []
+    assert not run_curation_job(spark, SF, out)["skipped"]
+
+
 def test_cli_smoke(tmp_path):
     """The spark-submit entrypoint runs the same code path end to end
     and prints the one-line JSON summary."""

@@ -36,6 +36,17 @@ def test_dedup_keeps_subset_in_order(ts):
     assert all(ts[i] for i in kept)  # no empties survive
 
 
+@given(texts, st.data())
+def test_dedup_chain_carries_across_a_split(ts, data):
+    """Deduping texts[:k], then texts[k:] seeded with the first part's
+    last kept text, keeps exactly what one pass over texts keeps."""
+    k = data.draw(st.integers(0, len(ts)))
+    head = dedup_consecutive(ts[:k])
+    prev = ts[head[-1]] if head else None
+    tail = dedup_consecutive(ts[k:], prev_text=prev)
+    assert head + [k + i for i in tail] == dedup_consecutive(ts)
+
+
 # --- levenshtein ----------------------------------------------------------
 
 s_short = st.text(alphabet="abcd", max_size=60)

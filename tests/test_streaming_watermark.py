@@ -310,8 +310,8 @@ def test_gc_knobs_are_mode_specific_and_never_reinterpreted(spark):
     )
 
     df = spark.createDataFrame([], DEDUP_SCHEMA)
-    with _pytest.raises(ValueError):
-        stateful_host_dedup(df, idle_timeout_ms=60_000)      # wm default
+    with _pytest.raises(TypeError):                       # retired knob
+        stateful_host_dedup(df, idle_timeout_ms=60_000)
     with _pytest.raises(ValueError):
         stateful_host_dedup(df, watermark=None,
                             idle_horizon_ms=60_000)
