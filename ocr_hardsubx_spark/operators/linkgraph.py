@@ -52,7 +52,8 @@ if TYPE_CHECKING:
 OUTLINK_SCHEMA = ("url string, src_host string, dst_host string, "
                   "dst_url string, anchor string, nofollow boolean")
 
-#: deterministic fixture-graph dials (mirrored by the oracle SQL)
+#: deterministic fixture-graph dials, read by the link-corpus writer
+#: (``dataset_queries._linked_pages``) and its DuckDB twin
 LINK_HOSTS = 50
 LINKS_PER_DOC = 3
 

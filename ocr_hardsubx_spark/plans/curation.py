@@ -71,31 +71,14 @@ def _survivors(spark: SparkSession, input_dir: str) -> tuple[DataFrame,
     is the C4-CLEANED text; stage semantics match q_rule_funnel with
     the near-dedup and trained-quality stages appended (the
     q_curation_funnel_full tail)."""
-    docs = dq._tbl(spark, input_dir, "documents")
-    base = docs.select(
-        "doc_id", "lang",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"))
-    url = dq.q_url_filter(spark, input_dir).select(
-        "doc_id", F.col("keep").alias("url_keep"))
-    gop = dq.q_gopher_rules(spark, input_dir).select(
-        "doc_id", F.col("keep").alias("gopher_keep"))
-    rep = dq.q_gopher_repetition(spark, input_dir).select(
-        "doc_id", F.col("keep").alias("rep_keep"))
-    c4 = dq.q_c4_clean(spark, input_dir).select(
-        "doc_id", F.col("keep").alias("c4_keep"), "clean_text",
-        F.when(F.col("clean_text") == "", F.lit(0))
-         .otherwise(F.size(F.split(F.replace(
-             F.col("clean_text"), F.lit("\n"), F.lit(" ")), " ")))
-         .cast("long").alias("clean_tokens"))
+    rules = dq._rule_gate_join(spark, input_dir)
     # the keep list covers only CLUSTERED docs (q_curation_funnel_full
     # anti-joins the losers for the same reason) — unclustered docs pass
     ded = dq.q_dedup_keep_list(spark, input_dir).select(
         "doc_id", F.col("keep").alias("dedup_keep"))
     qual = dq.q_quality_cut_trained(spark, input_dir).select(
         "doc_id", F.col("keep").alias("quality_keep"))
-    j = (base.join(url, "doc_id").join(gop, "doc_id").join(rep, "doc_id")
-         .join(c4, "doc_id").join(ded, "doc_id", "left")
-         .join(qual, "doc_id")
+    j = (rules.join(ded, "doc_id", "left").join(qual, "doc_id")
          .withColumn("dedup_keep",
                      F.coalesce(F.col("dedup_keep"), F.lit(True)))
          ).localCheckpoint()  # six-frame compose: evaluate ONCE for the

@@ -6447,6 +6447,31 @@ def q_url_filter_sql() -> str:
     """
 
 
+def _rule_gate_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per document: ``doc_id, lang, n_tokens``, the keep columns of the
+    four rule gates (``url_keep``, ``gopher_keep``, ``rep_keep``,
+    ``c4_keep``), the C4 ``clean_text`` and its ``clean_tokens`` count.
+    q_rule_funnel counts it; the curation job extends it with the dedup
+    and quality gates."""
+    base = _tbl(spark, sf_dir, "documents").select(
+        "doc_id", "lang",
+        F.size(F.split("text", " ")).cast("long").alias("n_tokens"))
+    url = q_url_filter(spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("url_keep"))
+    gop = q_gopher_rules(spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("gopher_keep"))
+    rep = q_gopher_repetition(spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("rep_keep"))
+    c4 = q_c4_clean(spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("c4_keep"), "clean_text",
+        F.when(F.col("clean_text") == "", F.lit(0))
+         .otherwise(F.size(F.split(F.replace(
+             F.col("clean_text"), F.lit("\n"), F.lit(" ")), " ")))
+         .cast("long").alias("clean_tokens"))
+    return (base.join(url, "doc_id").join(gop, "doc_id")
+            .join(rep, "doc_id").join(c4, "doc_id"))
+
+
 def q_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RULE-battery funnel (the FineWeb ordering of cheap per-doc
     filters, run before any dedup machinery): per stage, surviving
@@ -6464,24 +6489,7 @@ def q_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     first: the URL stage never reads text at all).  Every stage reuses
     the registered operator it names; this query adds doc_id hash
     joins and five 1-row aggregations, nothing else."""
-    docs = _tbl(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"))
-    url = q_url_filter(spark, sf_dir).select(
-        "doc_id", F.col("keep").alias("url_keep"))
-    gop = q_gopher_rules(spark, sf_dir).select(
-        "doc_id", F.col("keep").alias("gopher_keep"))
-    rep = q_gopher_repetition(spark, sf_dir).select(
-        "doc_id", F.col("keep").alias("rep_keep"))
-    c4 = q_c4_clean(spark, sf_dir).select(
-        "doc_id", F.col("keep").alias("c4_keep"),
-        F.when(F.col("clean_text") == "", F.lit(0))
-         .otherwise(F.size(F.split(F.replace(
-             F.col("clean_text"), F.lit("\n"), F.lit(" ")), " ")))
-         .cast("long").alias("clean_tokens"))
-    j = (base.join(url, "doc_id").join(gop, "doc_id")
-         .join(rep, "doc_id").join(c4, "doc_id"))
+    j = _rule_gate_join(spark, sf_dir)
 
     def stage(name, df, tok_col):
         return df.agg(
@@ -6659,17 +6667,20 @@ def q_pdf_main_content_sql() -> str:
 
 def _linked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hyperlinked page corpus (writer twin of the
-    q_outlinks oracle): doc ``i`` lives on host ``i % 50`` and links to
-    3 arithmetic-derived hosts, plus one RELATIVE link (urljoin must
-    resolve it against the page url), one ``rel=nofollow`` sponsored
+    q_outlinks oracle): doc ``i`` lives on host ``i % LINK_HOSTS`` and
+    links to 3 arithmetic-derived hosts, plus one RELATIVE link (urljoin
+    must resolve it against the page url), one ``rel=nofollow`` sponsored
     link (visible in the outlink table, excluded from the transition
     graph), and one mailto (the kernel must drop non-http(s) schemes).
     Every 7th doc carries ``<meta name="robots" content="noindex">``
     (the q_meta_robots gate)."""
-    from ocr_hardsubx_spark.operators.linkgraph import LINKS_PER_DOC
+    from ocr_hardsubx_spark.operators.linkgraph import (
+        LINK_HOSTS,
+        LINKS_PER_DOC,
+    )
 
     docs = _tbl(spark, sf_dir, "documents").select("doc_id")
-    src = (F.col("doc_id") % 50).cast("string")
+    src = (F.col("doc_id") % LINK_HOSTS).cast("string")
     head = F.when(
         F.col("doc_id") % 7 == 0,
         F.lit('<head><meta name="robots" content="noindex"></head>'),
@@ -6677,18 +6688,18 @@ def _linked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     pieces = [F.lit("<html>"), head,
               F.lit("<body><p>corpus page</p><ul>")]
     for k in range(1, LINKS_PER_DOC + 1):
-        raw = (F.col("doc_id") * 7 + 13 * k) % 50
-        dst = F.when(raw == F.col("doc_id") % 50, (raw + 1) % 50) \
-               .otherwise(raw).cast("string")
+        raw = (F.col("doc_id") * 7 + 13 * k) % LINK_HOSTS
+        dst = F.when(raw == F.col("doc_id") % LINK_HOSTS,
+                     (raw + 1) % LINK_HOSTS).otherwise(raw).cast("string")
         # the k=1 link targets a REAL page of the corpus (doc `dst`
-        # lives on host dst % 50 == dst) so frontier discovery has
-        # already-crawled targets to anti-join away; k>=2 links point
-        # at undiscovered paths
+        # lives on host dst % LINK_HOSTS == dst) so frontier discovery
+        # has already-crawled targets to anti-join away; k>=2 links
+        # point at undiscovered paths
         path = (F.concat(F.lit(".example/doc/"), dst) if k == 1
                 else F.lit(f".example/page?k={k}"))
         pieces += [F.lit('<li><a href="https://host'), dst, path,
                    F.lit('">more from host'), dst, F.lit("</a></li>")]
-    nf = ((F.col("doc_id") * 3 + 41) % 50).cast("string")
+    nf = ((F.col("doc_id") * 3 + 41) % LINK_HOSTS).cast("string")
     pieces += [F.lit('<li><a href="https://host'), nf,
                F.lit('.example/page?sponsored=1" rel="nofollow">'
                      "sponsored host"), nf, F.lit("</a></li>")]
@@ -6702,16 +6713,19 @@ def _linked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: relational twin of _linked_pages' link targets (DuckDB)
-_LINK_EDGE_SQL = """
+def _link_edge_sql() -> str:
+    """Relational twin of _linked_pages' link targets (DuckDB CTEs)."""
+    from ocr_hardsubx_spark.operators.linkgraph import LINK_HOSTS
+
+    return f"""
     base AS (
-      SELECT doc_id, doc_id % 50 AS src FROM documents
+      SELECT doc_id, doc_id % {LINK_HOSTS} AS src FROM documents
     ),
     cross_links AS (
       SELECT b.doc_id, b.src, k.k,
-             CASE WHEN (b.doc_id * 7 + 13 * k.k) % 50 = b.src
-                  THEN ((b.doc_id * 7 + 13 * k.k) % 50 + 1) % 50
-                  ELSE (b.doc_id * 7 + 13 * k.k) % 50 END AS dst
+             CASE WHEN (b.doc_id * 7 + 13 * k.k) % {LINK_HOSTS} = b.src
+                  THEN ((b.doc_id * 7 + 13 * k.k) % {LINK_HOSTS} + 1) % {LINK_HOSTS}
+                  ELSE (b.doc_id * 7 + 13 * k.k) % {LINK_HOSTS} END AS dst
       FROM base b CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) k
     ),
     link_rows AS (
@@ -6724,10 +6738,10 @@ _LINK_EDGE_SQL = """
              FALSE AS nofollow
       FROM cross_links
       UNION ALL
-      SELECT doc_id, src, (doc_id * 3 + 41) % 50 AS dst,
-             'https://host' || (doc_id * 3 + 41) % 50
+      SELECT doc_id, src, (doc_id * 3 + 41) % {LINK_HOSTS} AS dst,
+             'https://host' || (doc_id * 3 + 41) % {LINK_HOSTS}
                || '.example/page?sponsored=1' AS dst_url,
-             'sponsored host' || (doc_id * 3 + 41) % 50 AS anchor,
+             'sponsored host' || (doc_id * 3 + 41) % {LINK_HOSTS} AS anchor,
              TRUE AS nofollow
       FROM base
       UNION ALL
@@ -6775,7 +6789,7 @@ def q_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_outlinks_sql() -> str:
     return f"""
-    WITH {_LINK_EDGE_SQL}
+    WITH {_link_edge_sql()}
     SELECT 'https://host' || src || '.example/doc/' || doc_id AS url,
            'host' || src || '.example' AS src_host,
            'host' || dst || '.example' AS dst_host,
@@ -6799,7 +6813,7 @@ def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_link_graph_sql() -> str:
     return f"""
-    WITH {_LINK_EDGE_SQL},
+    WITH {_link_edge_sql()},
     agg AS (
       SELECT 'host' || src || '.example' AS src_host,
              'host' || dst || '.example' AS dst_host,
@@ -6862,7 +6876,7 @@ def q_pagerank_sql() -> str:
     )""")
     chain = ",".join(steps)
     return f"""
-    WITH {_LINK_EDGE_SQL},
+    WITH {_link_edge_sql()},
     agg AS (
       SELECT 'host' || src || '.example' AS src_host,
              'host' || dst || '.example' AS dst_host,
@@ -7012,7 +7026,7 @@ def q_anchor_text_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_anchor_text_df_sql() -> str:
     return f"""
-    WITH {_LINK_EDGE_SQL},
+    WITH {_link_edge_sql()},
     terms AS (
       SELECT 'host' || dst || '.example' AS dst_host,
              unnest(string_split(anchor, ' ')) AS term
@@ -7044,7 +7058,7 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_crawl_frontier_sql() -> str:
     return f"""
-    WITH {_LINK_EDGE_SQL},
+    WITH {_link_edge_sql()},
     crawled AS (
       SELECT 'https://host' || src || '.example/doc/' || doc_id AS url
       FROM base
@@ -7250,7 +7264,7 @@ def q_frontier_policed_sql() -> str:
     # candidates from the link-edge twin; the decision re-derived
     # RELATIONALLY: same regex strings, same (spec, allow) ordering
     return f"""
-    WITH {_LINK_EDGE_SQL},
+    WITH {_link_edge_sql()},
     cand AS (SELECT DISTINCT dst_url AS url FROM link_rows),
     parts AS (
       SELECT url,
@@ -8293,7 +8307,7 @@ def q_frontier_bloom_sql() -> str:
         f" AS UBIGINT) % {BLOOM_M} AS BIGINT)"
         for j in range(BLOOM_K))
     return f"""
-    WITH {_LINK_EDGE_SQL},
+    WITH {_link_edge_sql()},
     cand AS (SELECT DISTINCT dst_url AS url FROM link_rows),
     crawled AS (
       SELECT 'https://host' || doc_id % 50 || '.example/doc/' || doc_id

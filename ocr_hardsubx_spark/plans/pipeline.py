@@ -17,6 +17,13 @@ north_rule scale features (SURVEY.md §4 O11/O12, §7.6):
   visible if and only if its manifest exists.  Resume anti-joins pending
   input files against committed manifests, so a killed job re-processes
   only what was never committed and readers never see partial output.
+* **one storage seam** — ``_store(spark, path)`` picks a backend once
+  from the path: ``_LocalStore`` (``os``/``shutil``) for plain paths,
+  ``_HadoopStore`` (the Hadoop FileSystem API) for URIs such as
+  ``file://``, ``s3a://`` and ``hdfs://``.  Both offer the same
+  primitives, and the commit, resume, vacuum and lease protocols are
+  written once above them.  The exclusive create the lease relies on is
+  the backend's: ``open(p, "xb")`` locally, ``createNewFile`` on Hadoop.
 
 This is a minimal Iceberg-style commit protocol in plain parquet; on a
 real cluster the same job targets an Iceberg table and the manifest
@@ -25,9 +32,9 @@ becomes the table's own snapshot metadata.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -41,8 +48,151 @@ MANIFEST_SCHEMA = ("run_id string, input_file string, rows long, "
                    "n_partitions int, wall_ms long, day_range string")
 
 
+class _LocalStore:
+    """Plain local paths: ``os``/``shutil``, and ``open(p, "xb")`` as the
+    exclusive create.  Local paths never go through Hadoop, whose local
+    create is check-then-open (not exclusive) and writes ``.crc``
+    sidecars."""
+
+    exists = staticmethod(os.path.exists)
+    isfile = staticmethod(os.path.isfile)
+
+    def files(self, path: str) -> list[tuple[str, int]]:
+        paths = [os.path.join(root, f)
+                 for root, _, names in os.walk(path) for f in names]
+        return [(p, os.path.getsize(p)) for p in paths]
+
+    def names(self, path: str) -> list[str]:
+        return os.listdir(path) if os.path.isdir(path) else []
+
+    def read(self, path: str) -> bytes:
+        with open(path, "rb") as f:
+            return f.read()
+
+    def create(self, path: str, data: bytes) -> bool:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        try:
+            with open(path, "xb") as f:
+                f.write(data)
+            return True
+        except FileExistsError:
+            return False
+
+    def write(self, path: str, data: bytes) -> None:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "wb") as f:
+            f.write(data)
+
+    def rename(self, src: str, dst: str) -> bool:
+        try:
+            os.rename(src, dst)
+            return True
+        except OSError:
+            return False
+
+    def delete(self, path: str) -> bool:
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+            return True
+        try:
+            os.remove(path)
+            return True
+        except FileNotFoundError:
+            return False
+
+    def mtime_ms(self, path: str) -> int:
+        return int(os.path.getmtime(path) * 1000)
+
+    def touch(self, path: str) -> None:
+        os.utime(path, None)
+
+
+class _HadoopStore:
+    """URI paths (file://, s3a://, hdfs://, ...) through the Hadoop
+    FileSystem API; ``createNewFile`` is the exclusive create."""
+
+    def __init__(self, spark: SparkSession, uri: str) -> None:
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(uri).getFileSystem(
+            spark._jsc.hadoopConfiguration())
+
+    def exists(self, path: str) -> bool:
+        return self._fs.exists(self._path(path))
+
+    def isfile(self, path: str) -> bool:
+        return (self.exists(path)
+                and self._fs.getFileStatus(self._path(path)).isFile())
+
+    def files(self, path: str) -> list[tuple[str, int]]:
+        if not self.exists(path):
+            return []
+        out = []
+        it = self._fs.listFiles(self._path(path), True)
+        while it.hasNext():
+            st = it.next()
+            out.append((st.getPath().toString(), st.getLen()))
+        return out
+
+    def names(self, path: str) -> list[str]:
+        if not self.exists(path):
+            return []
+        return [st.getPath().getName()
+                for st in self._fs.listStatus(self._path(path))]
+
+    def read(self, path: str) -> bytes:
+        stream = self._fs.open(self._path(path))
+        try:
+            return bytes(stream.readAllBytes())
+        finally:
+            stream.close()
+
+    def create(self, path: str, data: bytes) -> bool:
+        if not self._fs.createNewFile(self._path(path)):
+            return False
+        self.write(path, data)
+        return True
+
+    def write(self, path: str, data: bytes) -> None:
+        stream = self._fs.create(self._path(path), True)
+        try:
+            stream.write(data)
+        finally:
+            stream.close()
+
+    def rename(self, src: str, dst: str) -> bool:
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            return bool(self._fs.rename(self._path(src), self._path(dst)))
+        except Py4JJavaError:        # e.g. the source is already gone
+            return False
+
+    def delete(self, path: str) -> bool:
+        return bool(self._fs.delete(self._path(path), True))
+
+    def mtime_ms(self, path: str) -> int:
+        return int(self._fs.getFileStatus(self._path(path))
+                   .getModificationTime())
+
+    def touch(self, path: str) -> None:
+        self._fs.setTimes(self._path(path), int(time.time() * 1000), -1)
+
+
 def _is_uri(path: str) -> bool:
     return "://" in path or path.startswith("file:")
+
+
+def _store(spark: SparkSession | None,
+           path: str) -> _LocalStore | _HadoopStore:
+    """The storage backend for ``path``: Hadoop for URIs (so a cluster
+    ``--input s3a://...`` lists real objects and manifests land under a
+    URI output, round-1/2 advisories), plain ``os`` otherwise."""
+    if not _is_uri(path):
+        return _LocalStore()
+    if spark is None:
+        raise ValueError(f"{path!r} requires a SparkSession "
+                         "(Hadoop FileSystem API)")
+    return _HadoopStore(spark, path)
 
 
 def _range_str(day_range: tuple[str, str] | None) -> str:
@@ -50,68 +200,29 @@ def _range_str(day_range: tuple[str, str] | None) -> str:
 
 
 def list_input_files(input_path: str, spark: SparkSession | None = None) -> list[str]:
-    """List input parquet files.  Plain local paths go through glob; URI
-    paths (file://, s3a://, hdfs://, ...) go through the Hadoop
-    FileSystem API so the documented cluster invocation
-    ``--input s3a://bucket/...`` lists real objects instead of silently
-    finding nothing (round-1 advisory).  Unreachable/unknown schemes
-    raise from the Hadoop layer rather than returning []."""
-    if _is_uri(input_path):
-        if spark is None:
-            raise ValueError(
-                f"listing {input_path!r} requires a SparkSession "
-                "(Hadoop FileSystem API)")
-        return _hadoop_list(spark, input_path)
-    if os.path.isfile(input_path):
+    """Every ``*.parquet`` file under ``input_path`` (or the path itself
+    when it is a file), hidden ``.*`` files skipped.  A missing path
+    raises FileNotFoundError rather than returning [], which would read
+    as "everything is committed"; unreachable/unknown schemes raise
+    from the Hadoop layer."""
+    store = _store(spark, input_path)
+    if not store.exists(input_path):
+        raise FileNotFoundError(input_path)
+    if store.isfile(input_path):
         return [input_path]
-    return sorted(
-        glob.glob(os.path.join(input_path, "**", "*.parquet"), recursive=True)
-    )
-
-
-def _hadoop_list(spark: SparkSession, uri: str) -> list[str]:
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        raise FileNotFoundError(uri)
-    if fs.getFileStatus(path).isFile():
-        return [uri]
-    out = []
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        p = it.next().getPath().toString()
-        if p.endswith(".parquet"):
-            out.append(p)
-    return sorted(out)
-
-
-def _hdfs(spark: SparkSession, uri: str):
-    """(Hadoop FileSystem, Path class) for a URI — the same API the
-    input listing uses, so manifests work against s3a://hdfs:// outputs
-    too (round-2 advisory: glob/os.path manifest IO silently found
-    nothing on resume under a URI output, duplicating every rerun)."""
-    jvm = spark._jvm
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    fs = path_cls(uri).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path_cls
+    return sorted(p for p, _ in store.files(input_path) if p.endswith(
+        ".parquet") and not os.path.basename(p).startswith("."))
 
 
 def _manifest_files(spark: SparkSession, output_path: str) -> list[str]:
+    store = _store(spark, output_path)
     mdir = os.path.join(output_path, "_manifests")
-    if _is_uri(output_path):
-        fs, path_cls = _hdfs(spark, mdir)
-        statuses = fs.globStatus(path_cls(mdir + "/*.parquet"))
-        if statuses is None:
-            return []
-        files = sorted(s.getPath().toString() for s in statuses)
-    else:
-        files = sorted(glob.glob(os.path.join(mdir, "*.parquet")))
-    return [f for f in files if _manifest_valid(spark, output_path, f)]
+    files = sorted(os.path.join(mdir, n) for n in store.names(mdir)
+                   if n.endswith(".parquet"))
+    return [f for f in files if _manifest_valid(store, f)]
 
 
-def _manifest_valid(spark: SparkSession, output_path: str,
-                    path: str) -> bool:
+def _manifest_valid(store: _LocalStore | _HadoopStore, path: str) -> bool:
     """Footer-validate a manifest before treating it as committed.
 
     On rename-atomic stores (local/HDFS) a manifest is whole by
@@ -121,22 +232,12 @@ def _manifest_valid(spark: SparkSession, output_path: str,
     manifest therefore reads as NOT committed — the run's inputs stay
     pending and re-process — instead of crashing every reader.
     Manifests are KB-sized driver-side metadata, so the parse check is
-    one footer read per file."""
-    import io as _io
-
+    one read per file."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
-        if _is_uri(output_path):
-            fs, path_cls = _hdfs(spark, path)
-            stream = fs.open(path_cls(path))
-            try:
-                raw = bytes(stream.readAllBytes())
-            finally:
-                stream.close()
-            pq.read_metadata(_io.BytesIO(raw))
-        else:
-            pq.read_metadata(path)
+        pq.read_metadata(pa.BufferReader(store.read(path)))
         return True
     except Exception:
         import logging
@@ -149,32 +250,21 @@ def _manifest_valid(spark: SparkSession, output_path: str,
 
 def _commit_manifest(spark: SparkSession, output_path: str,
                      run_id: str, table) -> None:
-    """Atomic manifest commit (tmp + rename).  Local outputs use
-    os.replace; URI outputs stage through a local temp file and rename
-    via the Hadoop FileSystem (atomic on HDFS; S3A rename is
-    copy+delete, the standard commit-protocol caveat there)."""
+    """Atomic manifest commit: write ``.{run_id}.tmp``, then rename it
+    into place (atomic on local/HDFS; S3A rename is copy+delete, the
+    standard commit-protocol caveat there, which ``_manifest_valid``
+    covers)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    store = _store(spark, output_path)
     mdir = os.path.join(output_path, "_manifests")
-    if _is_uri(output_path):
-        import tempfile
-
-        fs, path_cls = _hdfs(spark, mdir)
-        fs.mkdirs(path_cls(mdir))
-        with tempfile.NamedTemporaryFile(suffix=".parquet",
-                                         delete=False) as t:
-            local = t.name
-        pq.write_table(table, local)
-        tmp = path_cls(f"{mdir}/.{run_id}.tmp")
-        # delSrc=True removes the local temp after upload
-        fs.copyFromLocalFile(True, True, path_cls("file://" + local), tmp)
-        if not fs.rename(tmp, path_cls(f"{mdir}/{run_id}.parquet")):
-            raise IOError(f"manifest rename failed for run {run_id}")
-    else:
-        os.makedirs(mdir, exist_ok=True)
-        tmp = os.path.join(mdir, f".{run_id}.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(mdir, f"{run_id}.parquet"))
+    tmp = os.path.join(mdir, f".{run_id}.tmp")
+    store.write(tmp, buf.getvalue().to_pybytes())
+    if not store.rename(tmp, os.path.join(mdir, f"{run_id}.parquet")):
+        raise IOError(f"manifest rename failed for run {run_id}")
 
 
 def committed_manifests(spark: SparkSession, output_path: str) -> DataFrame:
@@ -459,22 +549,28 @@ def _run_extraction_job_inner(spark, pending, output_path, day_range,
             "wall_ms": wall_ms}
 
 
+def _run_sets(spark: SparkSession,
+              output_path: str) -> tuple[set[str], set[str]]:
+    """(committed run ids, run ids some committed manifest names in its
+    ``replaces`` column), from one collect."""
+    m = committed_manifests(spark, output_path)
+    if "replaces" not in m.columns:
+        m = m.withColumn("replaces", F.lit(""))
+    rows = m.select("run_id", "replaces").distinct().collect()
+    committed = {r["run_id"] for r in rows}
+    superseded = {x for r in rows for x in (r["replaces"] or "").split(",")
+                  if x}
+    return committed, superseded
+
+
 def live_runs(spark: SparkSession, output_path: str) -> list[str]:
     """Committed run ids minus any run superseded by a compaction
     (listed in some committed manifest's `replaces` column).  The
     `replaces` flip is what makes compaction crash-safe: the moment the
     compacted run's manifest commits, readers exclude the replaced runs
     even though their data dirs may still exist until GC."""
-    m = committed_manifests(spark, output_path)
-    if "replaces" not in m.columns:
-        m = m.withColumn("replaces", F.lit(""))
-    m = m.fillna({"replaces": ""})
-    runs = {r["run_id"] for r in m.select("run_id").distinct().collect()}
-    superseded: set[str] = set()
-    for r in (m.where(F.col("replaces") != "")
-              .select("replaces").distinct().collect()):
-        superseded.update(x for x in r["replaces"].split(",") if x)
-    return sorted(runs - superseded)
+    committed, superseded = _run_sets(spark, output_path)
+    return sorted(committed - superseded)
 
 
 def _read_run_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
@@ -500,13 +596,10 @@ def _read_run_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
 def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
     """Read only committed, non-superseded runs (manifest = commit
     log)."""
-    candidates = [os.path.join(output_path, "data", f"run_id={r}")
-                  for r in live_runs(spark, output_path)]
-    if _is_uri(output_path):
-        fs, path_cls = _hdfs(spark, output_path)
-        dirs = [d for d in candidates if fs.exists(path_cls(d))]
-    else:
-        dirs = [d for d in candidates if os.path.isdir(d)]
+    store = _store(spark, output_path)
+    dirs = [d for d in (os.path.join(output_path, "data", f"run_id={r}")
+                        for r in live_runs(spark, output_path))
+            if store.exists(d)]
     if not dirs:
         raise FileNotFoundError(f"no committed runs under {output_path}")
     return _read_run_dirs(spark, dirs)
@@ -516,47 +609,20 @@ def _run_dir_stats(spark: SparkSession, data_dir: str) -> tuple[int, int]:
     """(bytes, n_files) over *.parquet at ANY depth — day-partitioned
     runs nest part files under ``warc_dt=*/`` (a top-level-only listing
     would count them as 0 bytes and mis-size the compaction)."""
-    if _is_uri(data_dir):
-        fs, path_cls = _hdfs(spark, data_dir)
-        if not fs.exists(path_cls(data_dir)):
-            return 0, 0
-        it = fs.listFiles(path_cls(data_dir), True)
-        b = n = 0
-        while it.hasNext():
-            st = it.next()
-            if st.getPath().toString().endswith(".parquet"):
-                b += st.getLen()
-                n += 1
-        return b, n
-    b = n = 0
-    for root, _, files in os.walk(data_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                b += os.path.getsize(os.path.join(root, f))
-                n += 1
-    return b, n
+    sizes = [n for p, n in _store(spark, data_dir).files(data_dir)
+             if p.endswith(".parquet")]
+    return sum(sizes), len(sizes)
 
 
 def _delete_run(spark: SparkSession, output_path: str, run_id: str) -> bool:
     """Remove one run's data dir + manifest file.  Idempotent; returns
     whether anything existed."""
-    d = os.path.join(output_path, "data", f"run_id={run_id}")
-    mf = os.path.join(output_path, "_manifests", f"{run_id}.parquet")
-    if _is_uri(output_path):
-        fs, path_cls = _hdfs(spark, output_path)
-        existed = fs.exists(path_cls(d)) or fs.exists(path_cls(mf))
-        fs.delete(path_cls(d), True)
-        fs.delete(path_cls(mf), False)
-        return existed
-    import shutil
-
-    existed = os.path.isdir(d) or os.path.exists(mf)
-    shutil.rmtree(d, ignore_errors=True)
-    try:
-        os.remove(mf)
-    except OSError:
-        pass
-    return existed
+    store = _store(spark, output_path)
+    # a list, not a generator: any() must not skip the second delete
+    existed = [store.delete(p) for p in (
+        os.path.join(output_path, "data", f"run_id={run_id}"),
+        os.path.join(output_path, "_manifests", f"{run_id}.parquet"))]
+    return any(existed)
 
 
 def vacuum_superseded(spark: SparkSession, output_path: str) -> dict:
@@ -578,36 +644,14 @@ def vacuum_superseded(spark: SparkSession, output_path: str) -> dict:
       dir without a manifest may be a live extraction job between its
       write and its commit.
     """
-    m = committed_manifests(spark, output_path)
-    if "replaces" not in m.columns:
-        m = m.withColumn("replaces", F.lit(""))
-    m = m.fillna({"replaces": ""})
-    committed = {r["run_id"]
-                 for r in m.select("run_id").distinct().collect()}
-    superseded: set[str] = set()
-    for r in (m.where(F.col("replaces") != "")
-              .select("replaces").distinct().collect()):
-        superseded.update(x for x in r["replaces"].split(",") if x)
+    committed, superseded = _run_sets(spark, output_path)
     n_super = sum(
         _delete_run(spark, output_path, r) for r in sorted(superseded))
-
-    data_root = os.path.join(output_path, "data")
-    orphans = []
-    if _is_uri(output_path):
-        fs, path_cls = _hdfs(spark, output_path)
-        if fs.exists(path_cls(data_root)):
-            for st in fs.listStatus(path_cls(data_root)):
-                name = st.getPath().getName()
-                if name.startswith("run_id=compact"):
-                    rid = name.split("=", 1)[1]
-                    if rid not in committed:
-                        orphans.append(rid)
-    elif os.path.isdir(data_root):
-        for name in os.listdir(data_root):
-            if name.startswith("run_id=compact"):
-                rid = name.split("=", 1)[1]
-                if rid not in committed:
-                    orphans.append(rid)
+    names = _store(spark, output_path).names(
+        os.path.join(output_path, "data"))
+    orphans = [rid for rid in (n.split("=", 1)[1] for n in names
+                               if n.startswith("run_id=compact"))
+               if rid not in committed]
     for rid in orphans:
         _delete_run(spark, output_path, rid)
     return {"superseded_removed": int(n_super),
@@ -631,39 +675,19 @@ def _lease_mtime_ms(spark: SparkSession, output_path: str) -> int | None:
     empty/corrupt lease (a writer crashed in the create->write gap) is
     still breakable after its TTL, and a lease being renewed (touched)
     stays fresh even while its bytes are mid-rewrite."""
-    p = _lease_path(output_path)
     try:
-        if _is_uri(output_path):
-            fs, path_cls = _hdfs(spark, p)
-            if not fs.exists(path_cls(p)):
-                return None
-            return int(fs.getFileStatus(path_cls(p))
-                       .getModificationTime())
-        if not os.path.exists(p):
-            return None
-        return int(os.path.getmtime(p) * 1000)
-    except Exception:
+        return _store(spark, output_path).mtime_ms(_lease_path(output_path))
+    except Exception:                    # missing (released) or unreachable
         return None
 
 
 def _read_lease(spark: SparkSession, output_path: str) -> dict | None:
+    store = _store(spark, output_path)
     p = _lease_path(output_path)
     try:
-        if _is_uri(output_path):
-            fs, path_cls = _hdfs(spark, p)
-            if not fs.exists(path_cls(p)):
-                return None
-            stream = fs.open(path_cls(p))
-            try:
-                raw = bytes(stream.readAllBytes())
-            finally:
-                stream.close()
-        else:
-            if not os.path.exists(p):
-                return None
-            with open(p, "rb") as f:
-                raw = f.read()
-        return json.loads(raw.decode("utf-8"))
+        if not store.exists(p):
+            return None
+        return json.loads(store.read(p).decode("utf-8"))
     except FileNotFoundError:
         return None
     except Exception:
@@ -680,20 +704,13 @@ def _break_stale_lease(spark: SparkSession, output_path: str) -> bool:
     they fall back to the create race.  The unconditional-delete form
     this replaces let a slow breaker delete a FRESH lease another
     breaker had just created (review finding)."""
+    store = _store(spark, output_path)
     p = _lease_path(output_path)
     tomb = f"{p}.broken.{uuid.uuid4().hex[:8]}"
-    try:
-        if _is_uri(output_path):
-            fs, path_cls = _hdfs(spark, p)
-            if not fs.rename(path_cls(p), path_cls(tomb)):
-                return False
-            fs.delete(path_cls(tomb), False)
-            return True
-        os.rename(p, tomb)
-        os.remove(tomb)
-        return True
-    except OSError:
+    if not store.rename(p, tomb):
         return False
+    store.delete(tomb)
+    return True
 
 
 def _acquire_compaction_lease(spark: SparkSession, output_path: str,
@@ -712,34 +729,14 @@ def _acquire_compaction_lease(spark: SparkSession, output_path: str,
     atomic RENAME (one winner among concurrent breakers) + ONE
     re-create attempt; losing any race backs off with
     CompactionLeaseHeld.  Returns the owner token."""
-    p = _lease_path(output_path)
+    store = _store(spark, output_path)
     owner = uuid.uuid4().hex
     payload = json.dumps({"owner": owner, "ttl_ms": ttl_ms,
                           "acquired_ms": int(time.time() * 1000)}
                          ).encode("utf-8")
 
-    def try_create() -> bool:
-        if _is_uri(output_path):
-            fs, path_cls = _hdfs(spark, p)
-            fs.mkdirs(path_cls(os.path.dirname(p)))
-            if not fs.createNewFile(path_cls(p)):
-                return False
-            stream = fs.create(path_cls(p), True)
-            try:
-                stream.write(payload)
-            finally:
-                stream.close()
-            return True
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        try:
-            with open(p, "xb") as f:
-                f.write(payload)
-            return True
-        except FileExistsError:
-            return False
-
     for attempt in range(2):
-        if try_create():
+        if store.create(_lease_path(output_path), payload):
             return owner
         mtime = _lease_mtime_ms(spark, output_path)
         if mtime is None:                     # released between checks
@@ -803,13 +800,8 @@ def _renew_compaction_lease(spark: SparkSession, output_path: str,
     held = _read_lease(spark, output_path)
     if held is None or held.get("owner") != owner:
         return
-    p = _lease_path(output_path)
     try:
-        if _is_uri(output_path):
-            fs, path_cls = _hdfs(spark, p)
-            fs.setTimes(path_cls(p), int(time.time() * 1000), -1)
-        else:
-            os.utime(p, None)
+        _store(spark, output_path).touch(_lease_path(output_path))
     except OSError:
         pass
 
@@ -828,49 +820,23 @@ def _release_compaction_lease(spark: SparkSession, output_path: str,
     owner proceeds leaseless — reaching it requires our lease to have
     gone TTL-stale AND two acquirers inside the rename→restore
     microsecond window."""
+    store = _store(spark, output_path)
     p = _lease_path(output_path)
     tomb = f"{p}.release.{uuid.uuid4().hex[:8]}"
     try:
-        if _is_uri(output_path):
-            fs, path_cls = _hdfs(spark, p)
-            if not fs.rename(path_cls(p), path_cls(tomb)):
-                return                       # already gone / not ours
-            data = b""
-            if owner is not None:
-                stream = fs.open(path_cls(tomb))
-                try:
-                    data = bytes(stream.readAllBytes())
-                finally:
-                    stream.close()
-            try:
-                held = json.loads(data) if data else {}
-            except ValueError:   # torn write: identity unknown, restore
-                held = {}
-            if owner is not None and held.get("owner") != owner:
-                # displaced a fresh foreign lease: restore it atomically
-                if fs.createNewFile(path_cls(p)):
-                    out = fs.create(path_cls(p), True)
-                    try:
-                        out.write(data)
-                    finally:
-                        out.close()
-            fs.delete(path_cls(tomb), False)
-            return
-        os.rename(p, tomb)
+        if not store.rename(p, tomb):
+            return                           # already gone / not ours
         if owner is not None:
-            with open(tomb, "rb") as f:
-                data = f.read()
+            data = store.read(tomb)
             try:
                 held = json.loads(data)
-            except ValueError:
+            except ValueError:   # torn write: identity unknown, restore
                 held = {}
             if held.get("owner") != owner:
-                try:
-                    with open(p, "xb") as f:
-                        f.write(data)
-                except FileExistsError:
-                    pass                     # lost the restore race
-        os.remove(tomb)
+                # displaced a fresh foreign lease: restore it atomically
+                # (losing that create race leaves the winner's lease)
+                store.create(p, data)
+        store.delete(tomb)
     except OSError:
         pass
 
@@ -938,18 +904,13 @@ def _compact_extracted_locked(spark: SparkSession, output_path: str,
     total_bytes = sum(_run_dir_stats(spark, d)[0] for d in dirs)
     n_target = max(1, -(-total_bytes // (target_file_mb << 20)))
 
-    # snapshot-consistent carried metrics (same pinned run set)
-    m = committed_manifests(spark, output_path)
-    carried = (
-        m.where(F.col("run_id").isin(runs))
-        .select("input_file", "rows", "bytes_out", "day_range")
-        .collect())
+    # snapshot-consistent carried metrics (same pinned run set), one collect
+    carried = (committed_manifests(spark, output_path)
+               .where(F.col("run_id").isin(runs)).collect())
     # run_bytes_out is the authoritative per-run byte total on BOTH
     # metric paths (the per-file bytes_out=-1 sentinel points at it)
-    run_bytes = sum(
-        int(r["run_bytes_out"] or 0)
-        for r in m.where(F.col("run_id").isin(runs))
-        .select("run_id", "run_bytes_out").distinct().collect())
+    run_bytes = sum(int(b or 0) for _, b in
+                    {(r["run_id"], r["run_bytes_out"]) for r in carried})
     rows_total = sum(int(r["rows"]) for r in carried)
 
     new_id = "compact" + uuid.uuid4().hex[:9]

@@ -27,6 +27,18 @@ def corpus():
     return PART_CORPUS
 
 
+@pytest.fixture(params=["path", "file_uri"])
+def out_dir(request, tmp_path):
+    """An output directory, once as a plain path (local backend) and
+    once as a file:// URI (Hadoop backend)."""
+    out = str(tmp_path / "out")
+    return out if request.param == "path" else "file://" + out
+
+
+def _on_disk(path: str) -> str:
+    return path.removeprefix("file://")
+
+
 def test_partition_pruning_reaches_the_scan(spark, corpus):
     df = spark.read.parquet(corpus).where(
         F.col("warc_dt") == "2025-01-01")
@@ -179,6 +191,21 @@ def test_unreachable_uri_raises_not_empty(spark):
     """A bogus scheme must raise, never silently return zero files."""
     with pytest.raises(Exception):
         list_input_files("nosuchfs://bucket/prefix", spark)
+
+
+def test_missing_local_input_raises(spark, tmp_path):
+    """A missing local input (a typo'd --input) raises instead of
+    returning {"files": 0}, which reads as "everything is already
+    committed"; an existing directory with no parquet files (a hidden
+    one does not count) is empty."""
+    missing = str(tmp_path / "no_such_input")
+    with pytest.raises(FileNotFoundError):
+        list_input_files(missing)
+    with pytest.raises(FileNotFoundError):
+        run_extraction_job(spark, missing, str(tmp_path / "out"))
+    (tmp_path / "empty").mkdir()
+    (tmp_path / "empty" / ".in_progress.parquet").write_bytes(b"")
+    assert list_input_files(str(tmp_path / "empty")) == []
 
 
 SCAN_CONF_KEYS = ("spark.sql.files.maxPartitionBytes",
@@ -475,17 +502,17 @@ def test_vacuum_repairs_crashed_gc_before_next_compaction(spark, corpus,
     assert len(got) == n_docs and len(set(got)) == n_docs
 
 
-def test_vacuum_reclaims_orphan_compact_dir(spark, corpus, tmp_path):
+def test_vacuum_reclaims_orphan_compact_dir(spark, corpus, out_dir):
     """Crash between the compacted data write and its manifest commit:
     the orphan compact* dir is reclaimed by the next vacuum; a PLAIN
     run dir without a manifest (a live job mid-commit) is untouched."""
     from ocr_hardsubx_spark.plans.pipeline import vacuum_superseded
 
-    out = str(tmp_path / "out")
+    out = out_dir
     run_extraction_job(spark, corpus, out)
-    orphan = os.path.join(out, "data", "run_id=compactdeadbeef0")
+    orphan = os.path.join(_on_disk(out), "data", "run_id=compactdeadbeef0")
     os.makedirs(orphan)
-    midjob = os.path.join(out, "data", "run_id=aaaa1111bbbb2222")
+    midjob = os.path.join(_on_disk(out), "data", "run_id=aaaa1111bbbb2222")
     os.makedirs(midjob)
     vac = vacuum_superseded(spark, out)
     assert vac["orphans_removed"] == 1
@@ -493,7 +520,7 @@ def test_vacuum_reclaims_orphan_compact_dir(spark, corpus, tmp_path):
     assert os.path.exists(midjob)  # plain uncommitted run: NOT eligible
 
 
-def test_compaction_lease_blocks_second_compactor(spark, corpus, tmp_path):
+def test_compaction_lease_blocks_second_compactor(spark, corpus, out_dir):
     """Round-3 verdict item 10: while a lease is held, a second
     compactor aborts cleanly (no data touched, no `replaces` flip); a
     STALE lease (crashed owner past TTL) is broken and compaction
@@ -510,7 +537,8 @@ def test_compaction_lease_blocks_second_compactor(spark, corpus, tmp_path):
         live_runs,
     )
 
-    out = str(tmp_path / "out")
+    out = out_dir
+    lease = _lease_path(_on_disk(out))
     run_extraction_job(spark, corpus, out, max_files=2)
     run_extraction_job(spark, corpus, out)
     assert len(live_runs(spark, out)) == 2
@@ -522,20 +550,20 @@ def test_compaction_lease_blocks_second_compactor(spark, corpus, tmp_path):
     assert len(live_runs(spark, out)) == 2          # nothing happened
     # releasing with the WRONG owner is a no-op
     _release_compaction_lease(spark, out, "not-the-owner")
-    assert os.path.exists(_lease_path(out))
+    assert os.path.exists(lease)
     _release_compaction_lease(spark, out, token)
-    assert not os.path.exists(_lease_path(out))
+    assert not os.path.exists(lease)
 
     # a stale lease (crashed compactor) is broken after its TTL —
     # staleness is judged from the FILE mtime, so age the file itself
-    with open(_lease_path(out), "w") as f:
+    with open(lease, "w") as f:
         json.dump({"owner": "dead", "ttl_ms": 1}, f)
     old_t = _time.time() - 10
-    os.utime(_lease_path(out), (old_t, old_t))
+    os.utime(lease, (old_t, old_t))
     res = compact_extracted(spark, out)
     assert res["compacted"] and res["replaced"] == 2
     # the successful run released its own lease
-    assert not os.path.exists(_lease_path(out))
+    assert not os.path.exists(lease)
 
 
 def test_torn_manifest_reads_as_uncommitted(spark, corpus, tmp_path):
@@ -573,7 +601,7 @@ def test_torn_manifest_reads_as_uncommitted(spark, corpus, tmp_path):
 
 
 def test_lease_edge_cases_unreadable_break_and_renewal(spark, corpus,
-                                                       tmp_path):
+                                                       out_dir):
     """Review findings: (a) an EMPTY/corrupt lease (writer crashed in
     the create->write gap) is breakable after its TTL because staleness
     comes from the file mtime, never the content; (b) a FRESH
@@ -589,32 +617,33 @@ def test_lease_edge_cases_unreadable_break_and_renewal(spark, corpus,
         _renew_compaction_lease,
     )
 
-    out = str(tmp_path / "out")
+    out = out_dir
+    lease = _lease_path(_on_disk(out))
     run_extraction_job(spark, corpus, out, max_files=2)
 
     # (b) fresh zero-byte lease: identity unknown, still held
-    open(_lease_path(out), "wb").close()
+    open(lease, "wb").close()
     with pytest.raises(CompactionLeaseHeld):
         _acquire_compaction_lease(spark, out)
 
     # (a) the same zero-byte lease aged past the TTL: breakable
     old_t = _time.time() - 7200
-    os.utime(_lease_path(out), (old_t, old_t))
+    os.utime(lease, (old_t, old_t))
     token = _acquire_compaction_lease(spark, out)
     assert token
 
     # (c) renewal bumps mtime only for the owner
-    os.utime(_lease_path(out), (old_t, old_t))
+    os.utime(lease, (old_t, old_t))
     _renew_compaction_lease(spark, out, "not-the-owner")
-    assert os.path.getmtime(_lease_path(out)) < old_t + 1
+    assert os.path.getmtime(lease) < old_t + 1
     _renew_compaction_lease(spark, out, token)
-    assert os.path.getmtime(_lease_path(out)) > _time.time() - 60
+    assert os.path.getmtime(lease) > _time.time() - 60
     _release_compaction_lease(spark, out, token)
-    assert not os.path.exists(_lease_path(out))
+    assert not os.path.exists(lease)
 
 
 def test_lease_heartbeat_outlives_ttl_and_release_restores_foreign(
-        spark, corpus, tmp_path):
+        spark, corpus, out_dir):
     """(a) A compaction whose critical section outlives the TTL is NOT
     stealable while its heartbeat runs (the single post-rewrite renewal
     left the rewrite window unprotected — review finding); with the
@@ -632,7 +661,8 @@ def test_lease_heartbeat_outlives_ttl_and_release_restores_foreign(
         _release_compaction_lease,
     )
 
-    out = str(tmp_path / "out")
+    out = out_dir
+    lease = _lease_path(_on_disk(out))
     run_extraction_job(spark, corpus, out, max_files=2)
 
     ttl = 1000                               # 1s TTL, heartbeat ~every 250ms
@@ -649,8 +679,8 @@ def test_lease_heartbeat_outlives_ttl_and_release_restores_foreign(
     # (b) the displaced original owner releases: the thief's lease must
     # survive, content intact
     _release_compaction_lease(spark, out, token)
-    assert os.path.exists(_lease_path(out))
-    with open(_lease_path(out)) as f:
+    assert os.path.exists(lease)
+    with open(lease) as f:
         assert json.load(f)["owner"] == thief
     _release_compaction_lease(spark, out, thief)
-    assert not os.path.exists(_lease_path(out))
+    assert not os.path.exists(lease)
