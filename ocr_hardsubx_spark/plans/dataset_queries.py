@@ -705,6 +705,25 @@ def _ranked_top10(scored: DataFrame, *order) -> DataFrame:
     return top.withColumn("rank", F.row_number().over(w))
 
 
+def _cosine_top10(pairs: DataFrame) -> DataFrame:
+    """_ranked_top10 of ``pairs`` (a corpus ``vec_id``/``embedding`` beside
+    the query vector ``qv``) by cos_sim = round(cos(embedding, qv), 4):
+    dot and norms as JVM higher-order folds (zip_with + aggregate, no
+    Python), HALF_UP to 4 decimals before the ranking compares, as the
+    oracles' round does."""
+    dot = F.aggregate(
+        F.zip_with("embedding", "qv",
+                   lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0), lambda acc, v: acc + v)
+    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
+        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0), lambda acc, v: acc + v))
+    return _ranked_top10(pairs.select(
+        "vec_id",
+        F.round(dot / (nrm(F.col("embedding")) * nrm(F.col("qv"))), 4)
+         .alias("cos_sim")))
+
+
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k vs a fixed query vector (vec_id 0).
     The query side is a 1-row broadcast; dot products run as JVM
@@ -713,23 +732,8 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _tbl(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qv",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
-    scored = (
-        emb.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(dot / (norm(F.col("embedding")) * norm(F.col("qv"))), 4)
-             .alias("cos_sim"),
-        )
-    )
-    return _ranked_top10(scored)
+    return _cosine_top10(
+        emb.where(F.col("vec_id") != 0).crossJoin(F.broadcast(q)))
 
 
 def q_ann_cosine_topk_sql() -> str:
@@ -923,23 +927,8 @@ def q_ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
               for i in range(ANN_TOPK_PLANES)],
         )).alias("code"),
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "qv",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
-    scored = (
-        coded.where(F.col("vec_id") != 0)
-        .join(F.broadcast(probes), "code")
-        .select(
-            "vec_id",
-            F.round(dot / (nrm(F.col("embedding")) * nrm(F.col("qv"))), 4)
-             .alias("cos_sim"),
-        )
-    )
-    return _ranked_top10(scored)
+    return _cosine_top10(
+        coded.where(F.col("vec_id") != 0).join(F.broadcast(probes), "code"))
 
 
 def q_ann_bucketed_topk_sql() -> str:
@@ -1071,17 +1060,53 @@ def _ivf_assign_col(cents_norm: list[list[float]]):
     return F.array_position(sims, F.array_max(sims)).cast("int")
 
 
+def _ship_package() -> None:
+    """Attach the package zip to the active session: a kernel that calls
+    this module's numpy helpers pickles them by reference, so its Python
+    workers must import the package from any driver cwd."""
+    from .packaging import ensure_workers_can_import
+
+    ensure_workers_can_import(SparkSession.active())
+
+
+def _round_half_up(a, decimals: int):
+    """HALF_UP (away from zero) rounding — matches F.round / DuckDB
+    round; np.round is HALF_EVEN and would diverge on exact .5
+    boundaries."""
+    import numpy as np
+
+    p = 10.0 ** decimals
+    return np.sign(a) * np.floor(np.abs(a) * p + 0.5) / p
+
+
+def _ivf_assign_np(M, C):
+    """Centroid assignment of the rows of M (N, D) against the unit
+    centroid rows C (K, D): the first-max index (0-based; lowest
+    centroid id on ties) of the HALF_UP(4) rounded cosines M @ C.T / |m|,
+    plus the mask of nonzero-norm rows.  A zero-norm vector has no
+    angle; callers give it a NULL assignment, as the relational shadow
+    (try_divide -> NULL sims -> NULL argmax) and the oracle's explicit
+    zero-norm filter do."""
+    import numpy as np
+
+    nrm = np.linalg.norm(M, axis=1, keepdims=True)
+    sims = np.divide(M @ C.T, nrm, out=np.full((len(M), C.shape[0]), np.nan),
+                     where=nrm != 0)
+    return np.argmax(_round_half_up(sims, 4), axis=1), nrm[:, 0] != 0
+
+
 def _ivf_assign_udf(cents_norm: list[list[float]]):
-    """Production assignment kernel: Arrow-batched numpy matmul
-    (N,D) @ (D,K) + the same HALF_UP round-to-4 and first-max argmax as
-    the relational shadow and the oracle.  Measured 38x faster than the
-    fold form at 100k rows (0.6s vs 22.9s, local[32]) — higher-order
-    functions are interpreted per element, BLAS is not.  Created lazily:
-    @pandas_udf at module import time needs an active session."""
+    """Production assignment kernel: _ivf_assign_np over Arrow batches,
+    the same HALF_UP round-to-4 and first-max argmax as the relational
+    shadow and the oracle.  Measured 38x faster than the fold form at
+    100k rows (0.6s vs 22.9s, local[32]) — higher-order functions are
+    interpreted per element, BLAS is not.  Created lazily: @pandas_udf
+    at module import time needs an active session."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    _ship_package()
     C = np.asarray(cents_norm, dtype=np.float64)  # (K, D), unit rows
 
     @pandas_udf("int")
@@ -1094,16 +1119,8 @@ def _ivf_assign_udf(cents_norm: list[list[float]]):
         out = pd.array([pd.NA] * len(emb), dtype="Int32")
         if valid.any():
             M = np.vstack(emb[valid].to_numpy()).astype(np.float64)
-            nrm = np.linalg.norm(M, axis=1, keepdims=True)
-            nz = (nrm[:, 0] != 0)
-            sims = np.divide(M @ C.T, nrm,
-                             out=np.full((len(M), C.shape[0]), np.nan),
-                             where=nrm != 0)
-            sims = np.sign(sims) * np.floor(np.abs(sims) * 1e4 + 0.5) / 1e4
-            vals = pd.array(np.argmax(sims, axis=1) + 1, dtype="Int32")
-            # zero-norm vectors have no angle: NULL assignment, matching
-            # the relational shadow (try_divide -> NULL sims -> NULL
-            # argmax) and the oracle's explicit zero-norm filter
+            lists, nz = _ivf_assign_np(M, C)
+            vals = pd.array(lists + 1, dtype="Int32")
             vals[~nz] = pd.NA
             out[valid] = vals
         return pd.Series(out)
@@ -1177,9 +1194,11 @@ def _ivf_probe_ids(spark: SparkSession, sf_dir: str,
     if cents is None:
         cents = _ivf_centroids(spark, sf_dir)
     qv = np.asarray(_ivf_seed_vectors(spark, sf_dir)[0], dtype=np.float64)
-    qsims = np.asarray(cents, dtype=np.float64) @ (qv / np.linalg.norm(qv))
-    # HALF_UP to 4 decimals, matching F.round / DuckDB round
-    qsims = np.sign(qsims) * np.floor(np.abs(qsims) * 1e4 + 0.5) / 1e4
+    # normalize-then-matmul, unlike _ivf_assign_np's matmul-then-divide:
+    # the two orders can differ in the last ulp, which HALF_UP(4) can
+    # turn into a different sim, so only the rounding is shared
+    qsims = _round_half_up(
+        np.asarray(cents, dtype=np.float64) @ (qv / np.linalg.norm(qv)), 4)
     order = sorted(range(IVF_K), key=lambda k: (-qsims[k], k))
     return [k + 1 for k in order[:nprobe]]
 
@@ -1196,24 +1215,10 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int,
 
     q = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qv",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
-    scored = (
+    return _cosine_top10(
         emb.where(F.col("vec_id") != 0)
         .where(_ivf_assign_udf(cents)("embedding").isin(probe_ids))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(dot / (nrm(F.col("embedding")) * nrm(F.col("qv"))), 4)
-             .alias("cos_sim"),
-        )
-    )
-    return _ranked_top10(scored)
+        .crossJoin(F.broadcast(q)))
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1371,24 +1376,10 @@ def q_ann_ivf_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.schema(IVF_LAYOUT_SCHEMA).parquet(layout)
     q = spark.range(1).select(
         F.array(*[F.lit(float(v)) for v in qvec]).alias("qv"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qv",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
-    scored = (
+    return _cosine_top10(
         emb.where(F.col("list_id").isin(probe_ids))
         .where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(dot / (nrm(F.col("embedding")) * nrm(F.col("qv"))), 4)
-             .alias("cos_sim"),
-        )
-    )
-    return _ranked_top10(scored)
+        .crossJoin(F.broadcast(q)))
 
 
 def q_ann_ivf_pruned_topk_sql() -> str:
@@ -1397,14 +1388,26 @@ def q_ann_ivf_pruned_topk_sql() -> str:
     return q_ann_ivf_topk_sql()
 
 
+def _ivf_list_means(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """(list_id, n_members, m0..m{EMB_DIM-1}): assign every vector (the
+    same pure-projection quantizer the search uses), then each list's
+    elementwise mean as EMB_DIM independent `avg` aggregates — one
+    shuffle with map-side partial aggregation, NO posexplode (an explode
+    would multiply the shuffle by EMB_DIM; at 10^12 vectors that is the
+    difference between a routine agg and a dead stage).  Zero-norm
+    vectors (NULL list) are dropped."""
+    return (emb.select(_ivf_assign_udf(cents)("embedding").alias("list_id"),
+                       "embedding")
+            .where(F.col("list_id").isNotNull())
+            .groupBy("list_id").agg(
+                F.count("*").alias("n_members"),
+                *[F.avg(F.col("embedding")[i].cast("double")).alias(f"m{i}")
+                  for i in range(EMB_DIM)]))
+
+
 def q_ivf_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One distributed Lloyd iteration of spherical k-means over the
-    IVF codebook: assign every vector (the same pure-projection
-    quantizer the search uses), then compute each list's elementwise
-    mean as EMB_DIM independent `avg` aggregates — one shuffle with
-    map-side partial aggregation, NO posexplode (an explode would
-    multiply the shuffle by EMB_DIM; at 10^12 vectors that is the
-    difference between a routine agg and a dead stage).
+    IVF codebook: the per-list means of _ivf_list_means.
 
     Output is scalar per list — (list_id, n_members, shift) where
     `shift` = round(cos(new_mean, old_centroid), 4) — so the oracle
@@ -1412,16 +1415,8 @@ def q_ivf_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     A shift of 1.0 means the list is already converged; training loops
     this step until min(shift) ~ 1 (tests/test_ivf_ann.py pins the
     monotone-inertia property over ivf_lloyd)."""
-    emb = _tbl(spark, sf_dir, "embeddings")
     cents = _ivf_centroids(spark, sf_dir)
-    assigned = emb.select(
-        _ivf_assign_udf(cents)("embedding").alias("list_id"),
-        "embedding").where(F.col("list_id").isNotNull())
-    means = assigned.groupBy("list_id").agg(
-        F.count("*").alias("n_members"),
-        *[F.avg(F.col("embedding")[i].cast("double")).alias(f"m{i}")
-          for i in range(EMB_DIM)],
-    )
+    means = _ivf_list_means(_tbl(spark, sf_dir, "embeddings"), cents)
     # shift vs the old centroid (a per-list literal lookup via element_at
     # on a map literal — still a projection)
     cmap = F.map_from_arrays(
@@ -1466,43 +1461,32 @@ def q_ivf_train_step_sql() -> str:
     """
 
 
-def _round_half_up(a, decimals: int):
-    """HALF_UP (away from zero) rounding — matches F.round / DuckDB
-    round; np.round is HALF_EVEN and would diverge on exact .5
-    boundaries."""
-    import numpy as np
-
-    p = 10.0 ** decimals
-    return np.sign(a) * np.floor(np.abs(a) * p + 0.5) / p
+ANN_TRAIN_ITERS = 2   # Lloyd steps of ivf_lloyd / pq_lloyd
+ANN_TRAIN_ROUND = 6   # decimals a trained centroid is rounded to per step
 
 
 def ivf_lloyd(spark: SparkSession, sf_dir: str,
-              iters: int = 2,
               round_to: int | None = None) -> list[list[float]]:
-    """Full spherical-k-means refinement: `iters` Lloyd steps from the
-    deterministic seed codebook, re-normalizing each mean.  Returns the
-    trained codebook (position k <-> list id k+1).  Not a registered
-    query (iterative; the single step above is the oracle-checked unit),
-    but the trainer a production IVF build would loop.
+    """Full spherical-k-means refinement: ANN_TRAIN_ITERS Lloyd steps
+    from the deterministic seed codebook, re-normalizing each mean.
+    Returns the trained codebook (position k <-> list id k+1).  Not a
+    registered query (iterative; the single step above is the
+    oracle-checked unit), but the trainer a production IVF build would
+    loop.
 
     ``round_to`` HALF_UP-rounds each normalized centroid coordinate
     after every step — the cross-engine determinism dial the TRAINED
-    recall census uses (Spark's distributed avg and the oracle's
-    sequential avg differ by ulps per step; rounding collapses the
-    drift before it can flip a downstream assignment)."""
+    recall census sets to ANN_TRAIN_ROUND (Spark's distributed avg and
+    the oracle's sequential avg differ by ulps per step; rounding
+    collapses the drift before it can flip a downstream assignment).
+    None keeps the centroids exactly unit-norm, which rounding cannot."""
     import numpy as np
 
     cents = _ivf_centroids(spark, sf_dir)
     emb = _tbl(spark, sf_dir, "embeddings")
-    for _ in range(iters):
-        means = emb.select(
-            _ivf_assign_udf(cents)("embedding").alias("list_id"),
-            "embedding"
-        ).groupBy("list_id").agg(
-            *[F.avg(F.col("embedding")[i].cast("double")).alias(f"m{i}")
-              for i in range(EMB_DIM)])
+    for _ in range(ANN_TRAIN_ITERS):
         rows = {r["list_id"]: [r[f"m{i}"] for i in range(EMB_DIM)]
-                for r in means.collect()}
+                for r in _ivf_list_means(emb, cents).collect()}
         nxt = []
         for k in range(1, IVF_K + 1):
             if k in rows:
@@ -1719,10 +1703,8 @@ def _cosine_batch(a, b):
 
 
 def q_embed_neardup_sql() -> str:
-    tables = [_lsh_planes(ND_PLANES, seed=LSH_SEED + 100 + t)
-              for t in range(ND_TABLES)]
     per_table = []
-    for t, planes in enumerate(tables):
+    for t, planes in enumerate(_nd_tables()):
         code = _code_sql(planes)
         flips = ", ".join(f"xor(code, {1 << i})" for i in range(ND_PLANES))
         per_table.append(f"""
@@ -3414,17 +3396,45 @@ def _pq_codebook(spark: SparkSession, sf_dir: str):
                      for s in range(PQ_M)])          # (M, K, SUB)
 
 
+def _pq_sub_dists(X, cb, s: int):
+    """(N, PQ_K) HALF_UP(4) rounded squared L2 from the subspace-``s``
+    slice of each row of X (N, EMB_DIM) to the sub-centroids cb[s].
+    Encoding takes its first argmin; an ADC lookup table is its row for
+    the query."""
+    Xs = X[:, s * PQ_SUB:(s + 1) * PQ_SUB]
+    return _round_half_up(
+        ((Xs[:, None, :] - cb[s][None, :, :]) ** 2).sum(axis=2), 4)
+
+
+def _pq_encode(X, cb):
+    """(N, PQ_M) int32 PQ codes of the rows of X: per subspace the first
+    argmin of _pq_sub_dists (lowest code on ties — the oracle's ORDER BY
+    d2, code)."""
+    import numpy as np
+
+    return np.stack([np.argmin(_pq_sub_dists(X, cb, s), axis=1)
+                     for s in range(PQ_M)], axis=1).astype(np.int32)
+
+
+def _pq_lut(v, cb) -> list[list[float]]:
+    """ADC lookup table of the vector v (EMB_DIM,): per subspace, its
+    rounded squared L2 to each of the PQ_K sub-centroids."""
+    return [_pq_sub_dists(v[None, :], cb, s)[0].tolist()
+            for s in range(PQ_M)]
+
+
 def _pq_assign_udf(codebook):
-    """Arrow-batched PQ coder: squared-L2 to every sub-centroid via one
-    einsum per subspace, HALF_UP round-to-4, first-min argmin (lowest
-    code on ties — the oracle's ORDER BY dist, code).  Also returns the
-    reconstruction MSE under the chosen codes (the quantization-quality
-    census).  Same kernel discipline as the IVF/LSH coders: per-row
-    O(K x D) work belongs in BLAS, not interpreted folds."""
+    """Arrow-batched PQ coder: _pq_encode over each batch (broadcast
+    squared L2 per subspace, HALF_UP round-to-4, first-min argmin).
+    Also returns the reconstruction MSE under the chosen codes (the
+    quantization-quality census).  Same kernel discipline as the
+    IVF/LSH coders: per-row O(K x D) work belongs in numpy, not
+    interpreted folds."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    _ship_package()
     C = np.asarray(codebook, dtype=np.float64)      # (M, K, SUB)
 
     @pandas_udf("struct<codes: array<int>, recon_mse: double>")
@@ -3432,19 +3442,15 @@ def _pq_assign_udf(codebook):
         if len(emb) == 0:
             return pd.DataFrame({"codes": [], "recon_mse": []})
         M = np.vstack(emb.to_numpy()).astype(np.float64)  # (N, 64)
-        n = len(M)
-        codes = np.empty((n, PQ_M), dtype=np.int32)
-        err = np.zeros(n, dtype=np.float64)
+        codes = _pq_encode(M, C)
+        err = np.zeros(len(M), dtype=np.float64)
         for s in range(PQ_M):
-            X = M[:, s * PQ_SUB:(s + 1) * PQ_SUB]          # (N, SUB)
-            d2 = ((X[:, None, :] - C[s][None, :, :]) ** 2).sum(axis=2)
-            d2 = np.floor(d2 * 1e4 + 0.5) / 1e4            # HALF_UP(4)
-            codes[:, s] = np.argmin(d2, axis=1)            # first min
             chosen = C[s][codes[:, s]]                     # (N, SUB)
-            err += ((X - chosen) ** 2).sum(axis=1)
+            err += ((M[:, s * PQ_SUB:(s + 1) * PQ_SUB] - chosen) ** 2
+                    ).sum(axis=1)
         return pd.DataFrame({
             "codes": list(codes),
-            "recon_mse": np.floor(err / EMB_DIM * 1e4 + 0.5) / 1e4,
+            "recon_mse": _round_half_up(err / EMB_DIM, 4),
         })
 
     # pure kernel; single-evaluation mark (guide §4.4)
@@ -3518,10 +3524,8 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     its CODES — no float vectors touched at query time.  At 10^12
     vectors this is the in-RAM scan: 4 bytes/vector of codes + a 128-
     entry LUT, versus 256 bytes/vector for exact search.  The LUT rides
-    as array literals (element_at on the code column); the chained sum
-    keeps one association order so the oracle's identically-ordered sum
-    is bit-equal, and rounding lands on exact-decimal sums (never a
-    half boundary).  Top-10 ascending by (adc_dist, vec_id)."""
+    as array literals (element_at on the code column, summed by
+    _adc_dist).  Top-10 ascending by (adc_dist, vec_id)."""
     return _pq_adc_frame(spark, sf_dir, None)
 
 
@@ -3535,25 +3539,29 @@ def _pq_adc_frame(spark: SparkSession, sf_dir: str, cb) -> DataFrame:
     if cb is None:
         cb = _pq_codebook(spark, sf_dir)             # (M, K, SUB)
     qv = np.asarray(_ivf_seed_vectors(spark, sf_dir)[0], dtype=np.float64)
-    lut = []
-    for s in range(PQ_M):
-        qs = qv[s * PQ_SUB:(s + 1) * PQ_SUB]
-        d2 = ((qs[None, :] - cb[s]) ** 2).sum(axis=1)
-        lut.append((np.floor(d2 * 1e4 + 0.5) / 1e4).tolist())
+    lut = _pq_lut(qv, cb)
 
     coded = (emb.where(F.col("embedding").isNotNull()
                        & (F.col("vec_id") != 0))
              .select("vec_id",
                      _pq_assign_udf(cb)("embedding")["codes"]
                      .alias("codes")))
+    scored = coded.select(
+        "vec_id", _adc_dist(lambda s: F.array(*[F.lit(v) for v in lut[s]])))
+    return _ranked_top10(scored, F.asc("adc_dist"), F.asc("vec_id"))
+
+
+def _adc_dist(lut_row):
+    """adc_dist = round(sum over subspaces s of LUT[s][codes[s]], 4),
+    where ``lut_row(s)`` is the array column of subspace s's PQ_K LUT
+    entries.  Chained + keeps one association order, so the oracle's
+    ordered list_sum is bit-equal, and rounding lands on exact-decimal
+    sums (never a half boundary)."""
     adc = None
     for s in range(PQ_M):
-        term = F.element_at(
-            F.array(*[F.lit(v) for v in lut[s]]),
-            F.col("codes")[s] + 1)
+        term = F.element_at(lut_row(s), F.col("codes")[s] + 1)
         adc = term if adc is None else adc + term
-    scored = coded.select("vec_id", F.round(adc, 4).alias("adc_dist"))
-    return _ranked_top10(scored, F.asc("adc_dist"), F.asc("vec_id"))
+    return F.round(adc, 4).alias("adc_dist")
 
 
 def q_pq_adc_topk_sql() -> str:
@@ -3606,15 +3614,16 @@ def q_pq_adc_topk_sql() -> str:
 
 def _ivfpq_assign_udf(cents_norm, codebook):
     """One Arrow kernel computing BOTH quantizations per vector: the
-    IVF list (rounded-cosine argmax over the normalized centroids —
-    identical math to _ivf_assign_udf) and the PQ codes of the RESIDUAL
-    x - c_list (what remains after the coarse quantizer explains the
-    list; quantizing residuals is what makes the composed sketch far
-    tighter than PQ alone).  Zero-norm vectors get NULL list/codes."""
+    IVF list (_ivf_assign_np, as _ivf_assign_udf) and the PQ codes
+    (_pq_encode) of the RESIDUAL x - c_list (what remains after the
+    coarse quantizer explains the list; quantizing residuals is what
+    makes the composed sketch far tighter than PQ alone).  Zero-norm
+    vectors get NULL list/codes."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    _ship_package()
     C = np.asarray(cents_norm, dtype=np.float64)      # (K, 64)
     B = np.asarray(codebook, dtype=np.float64)        # (M, K, SUB)
 
@@ -3623,20 +3632,8 @@ def _ivfpq_assign_udf(cents_norm, codebook):
         if len(emb) == 0:
             return pd.DataFrame({"list_id": [], "codes": []})
         M = np.vstack(emb.to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(M, axis=1, keepdims=True)
-        nz = nrm[:, 0] != 0
-        sims = np.divide(M @ C.T, nrm,
-                         out=np.full((len(M), C.shape[0]), np.nan),
-                         where=nrm != 0)
-        sims = np.sign(sims) * np.floor(np.abs(sims) * 1e4 + 0.5) / 1e4
-        lists = np.argmax(sims, axis=1)               # first max
-        resid = M - C[lists]
-        codes = np.empty((len(M), PQ_M), dtype=np.int32)
-        for s in range(PQ_M):
-            X = resid[:, s * PQ_SUB:(s + 1) * PQ_SUB]
-            d2 = ((X[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-            d2 = np.floor(d2 * 1e4 + 0.5) / 1e4
-            codes[:, s] = np.argmin(d2, axis=1)
+        lists, nz = _ivf_assign_np(M, C)
+        codes = _pq_encode(M - C[lists], B)
         out_list = pd.array(lists + 1, dtype="Int32")
         out_list[~nz] = pd.NA
         return pd.DataFrame({
@@ -3659,8 +3656,8 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid differs per list, so each probed list gets its own
     PQ_M x PQ_K table (driver-side, nprobe x 128 rounded doubles);
     rows select their list's LUT with a when() chain over the nprobe
-    literals.  Chained + keeps one association order so the oracle's
-    ordered list_sum is bit-equal; ties order by (adc, vec_id)."""
+    literals, and _adc_dist sums the lookups; ties order by (adc,
+    vec_id)."""
     import numpy as np
 
     emb = _tbl(spark, sf_dir, "embeddings")
@@ -3669,14 +3666,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_ids = _ivf_probe_ids(spark, sf_dir, IVF_NPROBE)
     qv = np.asarray(_ivf_seed_vectors(spark, sf_dir)[0], dtype=np.float64)
     Cn = np.asarray(cents, dtype=np.float64)
-    luts = {}
-    for p in probe_ids:
-        qr = qv - Cn[p - 1]
-        luts[p] = []
-        for s in range(PQ_M):
-            qs = qr[s * PQ_SUB:(s + 1) * PQ_SUB]
-            d2 = ((qs[None, :] - cb[s]) ** 2).sum(axis=1)
-            luts[p].append((np.floor(d2 * 1e4 + 0.5) / 1e4).tolist())
+    luts = {p: _pq_lut(qv - Cn[p - 1], cb) for p in probe_ids}
 
     coded = (emb.where(F.col("embedding").isNotNull()
                        & (F.col("vec_id") != 0))
@@ -3686,19 +3676,18 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("vec_id", F.col("a.list_id").alias("list_id"),
                      F.col("a.codes").alias("codes"))
              .where(F.col("list_id").isin(probe_ids)))
-    adc = None
-    for s in range(PQ_M):
-        term = None
+
+    def lut_row(s):
+        # rows were filtered to the probed lists, so the chain always
+        # matches (its NULL default is unreachable)
+        row = None
         for p in probe_ids:
-            lookup = F.element_at(
-                F.array(*[F.lit(v) for v in luts[p][s]]),
-                F.col("codes")[s] + 1)
-            term = (F.when(F.col("list_id") == p, lookup) if term is None
-                    else term.when(F.col("list_id") == p, lookup))
-        term = term.otherwise(F.lit(None))   # unreachable: rows filtered
-        adc = term if adc is None else adc + term
-    scored = coded.select("vec_id", "list_id",
-                          F.round(adc, 4).alias("adc_dist"))
+            arr = F.array(*[F.lit(v) for v in luts[p][s]])
+            row = (F.when(F.col("list_id") == p, arr) if row is None
+                   else row.when(F.col("list_id") == p, arr))
+        return row
+
+    scored = coded.select("vec_id", "list_id", _adc_dist(lut_row))
     return _ranked_top10(scored, F.asc("adc_dist"), F.asc("vec_id"))
 
 
@@ -3928,6 +3917,20 @@ def _bloom_positions(gram_md5_col):
     ]
 
 
+def _bloom_probe(words: list[int], md5_col):
+    """True iff all BLOOM_K _bloom_positions bits of ``md5_col`` are set
+    in the filter ``words`` (signed longs, broadcast as one array
+    literal): pure bit arithmetic, no join against the filtered set."""
+    bloom = F.array(*[F.lit(w) for w in words])
+    hit = None
+    for p in _bloom_positions(md5_col):
+        bit = F.call_function(
+            "shiftrightunsigned",
+            F.element_at(bloom, (p.cast("int") / 64).cast("int") + 1),
+            (p % 64).cast("int")).bitwiseAND(F.lit(1)) == 1
+        hit = bit if hit is None else hit & bit
+    return hit
+
 
 _BLOOM_CACHE: dict = {}
 
@@ -3976,21 +3979,9 @@ def q_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle reconstructs the identical filter relationally
     and the outputs match exactly."""
     docs = _tbl(spark, sf_dir, "documents")
-    bloom = F.array(*[F.lit(w)
-                      for w in _bloom_words(spark, sf_dir)])
-
+    hit = _bloom_probe(_bloom_words(spark, sf_dir), F.col("g"))
     corpus = _gram_frame(docs.where(F.col("doc_id") >= DECON_BENCH_DOCS),
                          DECON_NGRAM)
-    checks = [
-        F.call_function(
-            "shiftrightunsigned",
-            F.element_at(bloom, (p.cast("int") / 64).cast("int") + 1),
-            (p % 64).cast("int")).bitwiseAND(F.lit(1)) == 1
-        for p in _bloom_positions(F.col("g"))
-    ]
-    hit = checks[0]
-    for c in checks[1:]:
-        hit = hit & c
     hits = (corpus.select("doc_id", hit.cast("int").alias("h"))
             .groupBy("doc_id").agg(F.sum("h").alias("n_bloom_hits")))
     return (
@@ -4059,25 +4050,24 @@ def q_decon_bloom_sql() -> str:
 # ground truth — recall@10 per method, cross-engine checked.
 
 
-def _pq_subspace_pairs(coded: DataFrame) -> DataFrame:
-    """(s, code, sub) rows from a coded frame with (embedding, codes):
-    one pre-SLICED row per (vector, subspace).  Pre-slicing keeps the
-    shuffle payload at PQ_SUB floats + the (s, code) key — at 10^12
-    vectors the train step moves M narrow rows per vector, never the
-    full embedding."""
-    return coded.select(F.explode(F.array(*[
+def _pq_cell_means(emb: DataFrame, cb) -> DataFrame:
+    """(s, code, n_members, m0..m{PQ_SUB-1}): PQ-code every non-NULL
+    vector under ``cb``, explode one pre-SLICED (s, code, sub) row per
+    (vector, subspace), then ONE shuffle on (s, code) for the member
+    count and per-dimension means (map-side-combinable avgs, the shape
+    of _ivf_list_means).  Pre-slicing keeps the shuffle payload at
+    PQ_SUB floats + the key — at 10^12 vectors the train step moves M
+    narrow rows per vector, never the full embedding."""
+    coded = emb.where(F.col("embedding").isNotNull()).select(
+        "embedding",
+        _pq_assign_udf(cb)("embedding")["codes"].alias("codes"))
+    pairs = coded.select(F.explode(F.array(*[
         F.struct(
             F.lit(s).alias("s"),
             F.col("codes")[s].alias("code"),
             F.slice("embedding", s * PQ_SUB + 1, PQ_SUB).alias("sub"))
         for s in range(PQ_M)])).alias("p")
     ).select("p.s", "p.code", "p.sub")
-
-
-def _pq_mean_agg(pairs: DataFrame) -> DataFrame:
-    """ONE shuffle on (s, code): member count + per-dimension means of
-    the assigned sub-vectors (map-side-combinable avgs, same shape as
-    q_ivf_train_step's)."""
     return pairs.groupBy("s", "code").agg(
         F.count("*").alias("n_members"),
         *[F.avg(F.col("sub")[j].cast("double")).alias(f"m{j}")
@@ -4091,12 +4081,8 @@ def q_pq_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     code) emit the member count and the L2 shift of the new mean from
     the old sub-centroid — the convergence observable a training loop
     watches.  Mirrors q_ivf_train_step for the coarse quantizer."""
-    emb = _tbl(spark, sf_dir, "embeddings")
     cb = _pq_codebook(spark, sf_dir)                   # (M, K, SUB)
-    coded = emb.where(F.col("embedding").isNotNull()).select(
-        "embedding",
-        _pq_assign_udf(cb)("embedding")["codes"].alias("codes"))
-    means = _pq_mean_agg(_pq_subspace_pairs(coded))
+    means = _pq_cell_means(_tbl(spark, sf_dir, "embeddings"), cb)
     # old sub-centroid lookup: a map literal keyed s*PQ_K + code
     # (M x K x SUB doubles ride in the plan — 4 KB, a projection)
     omap = F.map_from_arrays(
@@ -4156,32 +4142,26 @@ def q_pq_train_step_sql() -> str:
     """
 
 
-def pq_lloyd(spark: SparkSession, sf_dir: str, iters: int = 2,
-             round_to: int | None = None):
-    """Full PQ codebook training: `iters` per-subspace Lloyd steps from
-    the deterministic seed codebook.  Returns the trained (PQ_M, PQ_K,
-    PQ_SUB) codebook.  Not a registered query (iterative; the single
-    step above is the oracle-checked unit) — the driver loop collects
-    only PQ_M x PQ_K mean rows per step, never vectors.
+def pq_lloyd(spark: SparkSession, sf_dir: str):
+    """Full PQ codebook training: ANN_TRAIN_ITERS per-subspace Lloyd
+    steps from the deterministic seed codebook.  Returns the trained
+    (PQ_M, PQ_K, PQ_SUB) codebook.  Not a registered query (iterative;
+    the single step above is the oracle-checked unit) — the driver loop
+    collects only PQ_M x PQ_K mean rows per step, never vectors.
 
-    ``round_to`` HALF_UP-rounds each updated sub-centroid coordinate
-    after every step (the ivf_lloyd cross-engine determinism dial)."""
+    Each updated sub-centroid coordinate is HALF_UP-rounded to
+    ANN_TRAIN_ROUND decimals after every step (the ivf_lloyd
+    cross-engine determinism dial)."""
     import numpy as np
 
     cb = np.array(_pq_codebook(spark, sf_dir), dtype=np.float64)
     emb = _tbl(spark, sf_dir, "embeddings")
-    for _ in range(iters):
-        coded = emb.where(F.col("embedding").isNotNull()).select(
-            "embedding",
-            _pq_assign_udf(cb)("embedding")["codes"].alias("codes"))
-        rows = _pq_mean_agg(_pq_subspace_pairs(coded)).collect()
+    for _ in range(ANN_TRAIN_ITERS):
         nxt = cb.copy()                  # empty cells keep their centroid
-        for r in rows:
-            m = np.asarray([r[f"m{j}"] for j in range(PQ_SUB)],
-                           dtype=np.float64)
-            if round_to is not None:
-                m = _round_half_up(m, round_to)
-            nxt[r["s"], r["code"]] = m
+        for r in _pq_cell_means(emb, cb).collect():
+            nxt[r["s"], r["code"]] = _round_half_up(
+                np.asarray([r[f"m{j}"] for j in range(PQ_SUB)],
+                           dtype=np.float64), ANN_TRAIN_ROUND)
         cb = nxt
     return cb
 
@@ -4265,21 +4245,24 @@ def q_curation_funnel_full(spark: SparkSession,
     cut = substring_dedup_apply(docs).select("doc_id", "n_tokens_kept")
     qual = q_quality_cut_trained(spark, sf_dir).select("doc_id", "keep")
     j = surv.join(cut, "doc_id").join(qual, "doc_id")
-
-    def stage(name, df, tok_col):
-        return df.agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.coalesce(F.sum(tok_col), F.lit(0)).cast("long")
-             .alias("n_tokens"),
-        ).select(F.lit(name).alias("stage"), "n_docs", "n_tokens")
-
     return (
-        stage("1_raw", base, "n_tokens")
-        .unionByName(stage("2_near_dedup", surv, "n_tokens"))
-        .unionByName(stage("3_substring_cut", j, "n_tokens_kept"))
-        .unionByName(stage("4_quality", j.where(F.col("keep")),
-                           "n_tokens_kept"))
+        _funnel_stage("1_raw", base, "n_tokens")
+        .unionByName(_funnel_stage("2_near_dedup", surv, "n_tokens"))
+        .unionByName(_funnel_stage("3_substring_cut", j, "n_tokens_kept"))
+        .unionByName(_funnel_stage("4_quality", j.where(F.col("keep")),
+                                   "n_tokens_kept"))
     )
+
+
+def _funnel_stage(name: str, df: DataFrame, tok_col: str) -> DataFrame:
+    """One funnel row (stage, n_docs, n_tokens): a single-row
+    aggregation of ``df``, tokens summed from ``tok_col`` (0 when no
+    row survives)."""
+    return df.agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.coalesce(F.sum(tok_col), F.lit(0)).cast("long")
+         .alias("n_tokens"),
+    ).select(F.lit(name).alias("stage"), "n_docs", "n_tokens")
 
 
 def q_curation_funnel_full_sql() -> str:
@@ -4323,16 +4306,14 @@ def q_curation_funnel_full_sql() -> str:
     """
 
 
-ANN_TRAIN_ITERS = 2   # Lloyd steps for the TRAINED recall census
-
-
 def q_ann_recall_census_trained(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Seed-vs-TRAINED retrieval quality, side by side (round-5
     verdict item 4): recall@10 of the IVF and PQ-ADC searches under
     (a) the deterministic seed codebooks and (b) ANN_TRAIN_ITERS
     Lloyd steps of in-engine training (ivf_lloyd / pq_lloyd with the
-    round_to=6 cross-engine dial), against brute-force cosine truth.
+    ANN_TRAIN_ROUND cross-engine dial), against brute-force cosine
+    truth.
 
     Measured honest finding (BENCH/PLANS.md): on this corpus training
     lifts PQ-ADC recall (the quantization tightens around the data)
@@ -4343,15 +4324,14 @@ def q_ann_recall_census_trained(spark: SparkSession,
     binding constraint.  On clustered real embeddings the same
     operator is where the trained-IVF gain appears.
 
-    Cross-engine: every Lloyd step rounds centroids to 6 decimals and
-    every assignment rounds sims/distances to 4 (HALF_UP), so the
-    oracle re-deriving the full training relationally lands on
+    Cross-engine: every Lloyd step rounds centroids to ANN_TRAIN_ROUND
+    decimals and every assignment rounds sims/distances to 4 (HALF_UP),
+    so the oracle re-deriving the full training relationally lands on
     identical codebooks and identical retrieved sets."""
     truth = (q_ann_cosine_topk(spark, sf_dir)
              .select("vec_id").withColumn("hit", F.lit(1)))
-    cents_t = ivf_lloyd(spark, sf_dir, iters=ANN_TRAIN_ITERS,
-                        round_to=6)
-    cb_t = pq_lloyd(spark, sf_dir, iters=ANN_TRAIN_ITERS, round_to=6)
+    cents_t = ivf_lloyd(spark, sf_dir, round_to=ANN_TRAIN_ROUND)
+    cb_t = pq_lloyd(spark, sf_dir)
     parts = [
         ("ivf", "seed", q_ann_ivf_topk(spark, sf_dir)),
         ("pq_adc", "seed", q_pq_adc_topk(spark, sf_dir)),
@@ -4372,14 +4352,16 @@ def q_ann_recall_census_trained(spark: SparkSession,
     )
 
 
-def _ivf_lloyd_sql_ctes(iters: int) -> str:
-    """CTE chain re-deriving ivf_lloyd(iters, round_to=6) relationally:
-    per step — round-4 cosine assignment (kernel parity), 64 per-list
-    avgs, L2 normalize, round-6.  Empty lists keep their centroid."""
+def _ivf_lloyd_sql_ctes() -> str:
+    """CTE chain re-deriving ivf_lloyd(round_to=ANN_TRAIN_ROUND)
+    relationally: per step — round-4 cosine assignment (kernel parity),
+    64 per-list avgs, L2 normalize, round.  Empty lists keep their
+    centroid."""
     dims = range(EMB_DIM)
     avgs = ", ".join(f"avg(e.x[{d + 1}]) AS m{d}" for d in dims)
     nrm = " + ".join(f"m.m{d}*m.m{d}" for d in dims)
-    newc = ", ".join(f"round(m.m{d} / sqrt({nrm}), 6)" for d in dims)
+    newc = ", ".join(f"round(m.m{d} / sqrt({nrm}), {ANN_TRAIN_ROUND})"
+                     for d in dims)
     parts = [f"""
     icents0 AS (
       SELECT vec_id AS cid,
@@ -4389,7 +4371,7 @@ def _ivf_lloyd_sql_ctes(iters: int) -> str:
                       CAST(embedding AS DOUBLE[])))) AS c
       FROM embeddings WHERE vec_id BETWEEN 1 AND {IVF_K}
     )"""]
-    for i in range(iters):
+    for i in range(ANN_TRAIN_ITERS):
         parts.append(f"""
     isims{i} AS (
       SELECT e.vec_id, c.cid,
@@ -4419,16 +4401,16 @@ def _ivf_lloyd_sql_ctes(iters: int) -> str:
     return ",".join(parts)
 
 
-def _pq_lloyd_sql_ctes(iters: int) -> str:
-    """CTE chain re-deriving pq_lloyd(iters, round_to=6) relationally:
-    per step — round-4 squared-L2 sub-assignment (kernel parity),
-    PQ_SUB per-cell avgs, round-6.  Empty cells keep their
-    sub-centroid."""
+def _pq_lloyd_sql_ctes() -> str:
+    """CTE chain re-deriving pq_lloyd relationally: per step — round-4
+    squared-L2 sub-assignment (kernel parity), PQ_SUB per-cell avgs,
+    round to ANN_TRAIN_ROUND.  Empty cells keep their sub-centroid."""
     subs = ", ".join(f"({s})" for s in range(PQ_M))
     avgs = ", ".join(
         f"avg(e.x[a.s * {PQ_SUB} + {j + 1}]) AS m{j}"
         for j in range(PQ_SUB))
-    newc = ", ".join(f"round(m.m{j}, 6)" for j in range(PQ_SUB))
+    newc = ", ".join(f"round(m.m{j}, {ANN_TRAIN_ROUND})"
+                     for j in range(PQ_SUB))
     parts = [f"""
     pcb0 AS (
       SELECT sp.s, e.vec_id - 1 AS code,
@@ -4436,7 +4418,7 @@ def _pq_lloyd_sql_ctes(iters: int) -> str:
       FROM e CROSS JOIN (VALUES {subs}) sp(s)
       WHERE e.vec_id BETWEEN 1 AND {PQ_K}
     )"""]
-    for i in range(iters):
+    for i in range(ANN_TRAIN_ITERS):
         parts.append(f"""
     psub{i} AS (
       SELECT e.vec_id, cb.s, cb.code,
@@ -4474,8 +4456,8 @@ def q_ann_recall_census_trained_sql() -> str:
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x
       FROM embeddings WHERE embedding IS NOT NULL
     ),
-    {_ivf_lloyd_sql_ctes(it)},
-    {_pq_lloyd_sql_ctes(it)},
+    {_ivf_lloyd_sql_ctes()},
+    {_pq_lloyd_sql_ctes()},
     tsims AS (
       SELECT e.vec_id, c.cid,
              round(list_dot_product(e.x, c.c)
@@ -5487,9 +5469,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_centroids(spark, sf_dir)
     C = np.asarray(cents, dtype=np.float64)
 
-    def _r4(x):
-        return np.sign(x) * np.floor(np.abs(x) * 1e4 + 0.5) / 1e4
-
     # no .where(list_id.isNotNull()) here: a Filter on the UDF column
     # makes ExtractPythonUDFs evaluate the kernel TWICE (once for the
     # filter, once for the projection — no CSE across operators).  The
@@ -5508,10 +5487,12 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cent_sim": pd.Series([], dtype="float64"),
                 "is_dropped": pd.Series([], dtype="bool")})
         M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+        # normalize-then-matmul (not _ivf_assign_np's divide-after):
+        # only the rounding is shared, the orders can differ in an ulp
         U = M / np.linalg.norm(M, axis=1, keepdims=True)
-        S = _r4(U @ U.T)
+        S = _round_half_up(U @ U.T, 4)
         lid = int(pdf["list_id"].iloc[0])
-        cs = _r4(U @ C[lid - 1])
+        cs = _round_half_up(U @ C[lid - 1], 4)
         ids = pdf["vec_id"].to_numpy()
         dup = S >= SEMDEDUP_TAU
         np.fill_diagonal(dup, False)
@@ -6490,23 +6471,15 @@ def q_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registered operator it names; this query adds doc_id hash
     joins and five 1-row aggregations, nothing else."""
     j = _rule_gate_join(spark, sf_dir)
-
-    def stage(name, df, tok_col):
-        return df.agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.coalesce(F.sum(tok_col), F.lit(0)).cast("long")
-             .alias("n_tokens"),
-        ).select(F.lit(name).alias("stage"), "n_docs", "n_tokens")
-
     s2 = j.where("url_keep")
     s3 = s2.where("gopher_keep")
     s4 = s3.where("rep_keep")
     s5 = s4.where("c4_keep")
-    return (stage("1_raw", j, "n_tokens")
-            .unionByName(stage("2_url", s2, "n_tokens"))
-            .unionByName(stage("3_gopher", s3, "n_tokens"))
-            .unionByName(stage("4_repetition", s4, "n_tokens"))
-            .unionByName(stage("5_c4", s5, "clean_tokens")))
+    return (_funnel_stage("1_raw", j, "n_tokens")
+            .unionByName(_funnel_stage("2_url", s2, "n_tokens"))
+            .unionByName(_funnel_stage("3_gopher", s3, "n_tokens"))
+            .unionByName(_funnel_stage("4_repetition", s4, "n_tokens"))
+            .unionByName(_funnel_stage("5_c4", s5, "clean_tokens")))
 
 
 def q_rule_funnel_sql() -> str:
@@ -6665,6 +6638,28 @@ def q_pdf_main_content_sql() -> str:
 # link graph + PageRank (operators/linkgraph.py)
 # --------------------------------------------------------------------------
 
+def _link_hosts() -> int:
+    """linkgraph.LINK_HOSTS, read at call time: the crawl fixtures put
+    doc ``i`` on host ``i % LINK_HOSTS``."""
+    from ocr_hardsubx_spark.operators import linkgraph
+
+    return linkgraph.LINK_HOSTS
+
+
+def _doc_url_col():
+    """Spark column: the crawl fixture url of ``doc_id``,
+    https://host{doc_id % LINK_HOSTS}.example/doc/{doc_id}."""
+    return F.concat(F.lit("https://host"),
+                    (F.col("doc_id") % _link_hosts()).cast("string"),
+                    F.lit(".example/doc/"), F.col("doc_id").cast("string"))
+
+
+def _doc_url_sql() -> str:
+    """DuckDB twin of _doc_url_col."""
+    return (f"'https://host' || doc_id % {_link_hosts()} || '.example/doc/'"
+            " || doc_id")
+
+
 def _linked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hyperlinked page corpus (writer twin of the
     q_outlinks oracle): doc ``i`` lives on host ``i % LINK_HOSTS`` and
@@ -6680,7 +6675,6 @@ def _linked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _tbl(spark, sf_dir, "documents").select("doc_id")
-    src = (F.col("doc_id") % LINK_HOSTS).cast("string")
     head = F.when(
         F.col("doc_id") % 7 == 0,
         F.lit('<head><meta name="robots" content="noindex"></head>'),
@@ -6707,8 +6701,7 @@ def _linked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
                      '<li><a href="mailto:ops@example.org">contact</a>'
                      "</li></ul></body></html>")]
     return docs.select(
-        F.concat(F.lit("https://host"), src, F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
+        _doc_url_col().alias("url"),
         F.encode(F.concat(*pieces), "UTF-8").alias("html"),
     )
 
@@ -7085,8 +7078,8 @@ def q_meta_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_meta_robots_sql() -> str:
-    return """
-    SELECT 'https://host' || doc_id % 50 || '.example/doc/' || doc_id
+    return f"""
+    SELECT {_doc_url_sql()}
              AS url,
            doc_id % 7 = 0 AS noindex,
            FALSE AS nofollow_page,
@@ -7111,7 +7104,8 @@ def q_host_reputation_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = ranks.count()
     docs = _tbl(spark, sf_dir, "documents").select(
         "doc_id",
-        F.concat(F.lit("host"), (F.col("doc_id") % 50).cast("string"),
+        F.concat(F.lit("host"),
+                 (F.col("doc_id") % _link_hosts()).cast("string"),
                  F.lit(".example")).alias("host"))
     return (docs.join(F.broadcast(ranks),
                       docs.host == ranks.host)
@@ -7125,15 +7119,16 @@ def q_host_reputation_cut_sql() -> str:
     assert pr_chain.startswith("WITH ")
     body = pr_chain[len("WITH "):]
     head, _sep, _final = body.rpartition("SELECT host, round(pr, 6)")
+    n = _link_hosts()
     return f"""
     WITH {head},
     ranked AS (SELECT host, round(pr, 6) AS pr FROM pr5)
     SELECT d.doc_id,
-           'host' || d.doc_id % 50 || '.example' AS host,
+           'host' || d.doc_id % {n} || '.example' AS host,
            r.pr,
            r.pr >= 1.0 / (SELECT n FROM nh) AS keep
     FROM documents d
-    JOIN ranked r ON r.host = 'host' || d.doc_id % 50 || '.example'
+    JOIN ranked r ON r.host = 'host' || d.doc_id % {n} || '.example'
     """
 
 
@@ -7150,7 +7145,8 @@ def _robots_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     covering prefix, longest-match-override, wildcard, and $-anchored
     patterns."""
     hosts = (_tbl(spark, sf_dir, "documents")
-             .select((F.col("doc_id") % 50).alias("h")).distinct())
+             .select((F.col("doc_id") % _link_hosts()).alias("h"))
+             .distinct())
     h = F.col("h")
     star = F.concat(
         F.lit("User-agent: *\n"),
@@ -7190,8 +7186,9 @@ def q_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_robots_rules_sql() -> str:
-    return r"""
-    WITH hosts AS (SELECT DISTINCT doc_id % 50 AS h FROM documents),
+    n = _link_hosts()
+    return rf"""
+    WITH hosts AS (SELECT DISTINCT doc_id % {n} AS h FROM documents),
     eligible AS (SELECT h FROM hosts WHERE h % 7 <> 3),
     rules AS (
       SELECT h, FALSE AS allow, '/page' AS pattern,
@@ -7215,10 +7212,13 @@ def q_robots_rules_sql() -> str:
     """
 
 
-#: arithmetic twin of the parsed rule table, for oracles that need the
-#: DECISION (q_frontier_policed) — mirrors q_robots_rules_sql's rows
-_ROBOTS_RULES_SQL = r"""
-    hosts AS (SELECT DISTINCT doc_id % 50 AS h FROM documents),
+def _robots_rules_sql() -> str:
+    """Arithmetic twin of the parsed rule table, for oracles that need
+    the DECISION (q_frontier_policed) — mirrors q_robots_rules_sql's
+    rows."""
+    n = _link_hosts()
+    return rf"""
+    hosts AS (SELECT DISTINCT doc_id % {n} AS h FROM documents),
     eligible AS (SELECT h FROM hosts WHERE h % 7 <> 3),
     rules AS (
       SELECT 'host' || h || '.example' AS host, FALSE AS allow,
@@ -7275,7 +7275,7 @@ def q_frontier_policed_sql() -> str:
                AS path
       FROM cand
     ),
-    {_ROBOTS_RULES_SQL.strip()},
+    {_robots_rules_sql().strip()},
     matched AS (
       SELECT p.url, r.allow, r.spec
       FROM parts p JOIN rules r ON r.host = p.host
@@ -7323,9 +7323,7 @@ def _raw_payload_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
            .when(m == 3, F.lit("text/html"))
            .otherwise(F.lit(None).cast("string")))
     return docs.select(
-        F.concat(F.lit("https://host"),
-                 (F.col("doc_id") % 50).cast("string"),
-                 F.lit(".example/doc/"), did).alias("url"),
+        _doc_url_col().alias("url"),
         raw.alias("raw"), ct.alias("content_type"), "doc_id")
 
 
@@ -7341,8 +7339,8 @@ def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_charset_decode_sql() -> str:
-    return """
-    SELECT 'https://host' || doc_id % 50 || '.example/doc/' || doc_id
+    return f"""
+    SELECT {_doc_url_sql()}
              AS url,
            CASE doc_id % 4
              WHEN 0 THEN '<meta charset="utf-8">café ' || doc_id
@@ -7382,6 +7380,7 @@ def q_http_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_workers_can_import(spark)
     docs = _tbl(spark, sf_dir, "documents").select("doc_id")
+    hosts = _link_hosts()
 
     def gen(batches):
         import gzip as _gzip
@@ -7396,7 +7395,7 @@ def q_http_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             plain, chunked = [], []
             for doc_id in pdf["doc_id"]:
-                url = (f"https://host{int(doc_id) % 50}.example"
+                url = (f"https://host{int(doc_id) % hosts}.example"
                        f"/doc/{int(doc_id)}")
                 m = int(doc_id) % 5
                 if m == 0:
@@ -7447,8 +7446,8 @@ def q_http_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_http_gate_sql() -> str:
-    return """
-    SELECT 'https://host' || doc_id % 50 || '.example/doc/' || doc_id
+    return f"""
+    SELECT {_doc_url_sql()}
              AS url,
            CAST(200 AS INT) AS status,
            CASE WHEN doc_id % 5 = 0
@@ -7478,7 +7477,7 @@ def _sitemap_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(host) + sort_array(collect_list) + transform — so the
     oracle can re-derive every byte."""
     docs = _tbl(spark, sf_dir, "documents").select(
-        "doc_id", (F.col("doc_id") % 50).alias("h"))
+        "doc_id", (F.col("doc_id") % _link_hosts()).alias("h"))
     agg = docs.groupBy("h").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids"))
     h = F.col("h").cast("string")
@@ -7523,18 +7522,19 @@ def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sitemap_urls_sql() -> str:
-    return """
+    n = _link_hosts()
+    return f"""
     WITH urlset_rows AS (
-      SELECT 'host' || doc_id % 50 || '.example' AS host,
+      SELECT 'host' || doc_id % {n} || '.example' AS host,
              'urlset' AS kind,
-             'https://host' || doc_id % 50 || '.example/doc/' || doc_id
+             {_doc_url_sql()}
                AS loc,
              '2025-01-' ||
                lpad(CAST((doc_id * 3) % 28 + 1 AS VARCHAR), 2, '0')
                AS lastmod
-      FROM documents WHERE (doc_id % 50) % 10 <> 0
+      FROM documents WHERE (doc_id % {n}) % 10 <> 0
     ),
-    hosts AS (SELECT DISTINCT doc_id % 50 AS h FROM documents),
+    hosts AS (SELECT DISTINCT doc_id % {n} AS h FROM documents),
     fresh_rows AS (
       SELECT 'host' || h || '.example' AS host,
              'urlset' AS kind,
@@ -7573,10 +7573,7 @@ def q_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select(F.col("loc").alias("url"),
                        F.to_date("lastmod").alias("lastmod")))
     crawled = _tbl(spark, sf_dir, "documents").select(
-        F.concat(F.lit("https://host"),
-                 (F.col("doc_id") % 50).cast("string"),
-                 F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
+        _doc_url_col().alias("url"),
         F.make_date(F.lit(2025), F.lit(1),
                     (F.col("doc_id") % 28 + 1).cast("int"))
          .alias("crawled"))
@@ -7593,8 +7590,8 @@ def q_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_recrawl_schedule_sql() -> str:
-    return """
-    SELECT 'https://host' || doc_id % 50 || '.example/doc/' || doc_id
+    return f"""
+    SELECT {_doc_url_sql()}
              AS url,
            strftime(make_date(2025, 1, CAST((doc_id * 3) % 28 + 1
                                             AS INT)), '%Y-%m-%d')
@@ -7602,7 +7599,7 @@ def q_recrawl_schedule_sql() -> str:
            strftime(make_date(2025, 1, CAST(doc_id % 28 + 1 AS INT)),
                     '%Y-%m-%d') AS crawled,
            (doc_id * 3) % 28 > doc_id % 28 AS refetch
-    FROM documents WHERE (doc_id % 50) % 10 <> 0
+    FROM documents WHERE (doc_id % {_link_hosts()}) % 10 <> 0
     """
 
 
@@ -7918,17 +7915,18 @@ def q_crawl_scheduler_sql() -> str:
     assert pr_chain.startswith("WITH ")
     body = pr_chain[len("WITH "):]
     head, _sep, _final = body.rpartition("SELECT host, round(pr, 6)")
+    n = _link_hosts()
     return f"""
     WITH {head.rstrip()},
     ranked AS (SELECT host, round(pr, 6) AS pr FROM pr5),
     sm_cand AS (
-      SELECT 'https://host' || doc_id % 50 || '.example/doc/' || doc_id
+      SELECT {_doc_url_sql()}
                AS url
-      FROM documents WHERE (doc_id % 50) % 10 <> 0
+      FROM documents WHERE (doc_id % {n}) % 10 <> 0
       UNION ALL
-      SELECT DISTINCT 'https://host' || doc_id % 50 || '.example/new/'
-               || doc_id % 50
-      FROM documents WHERE (doc_id % 50) % 10 <> 0
+      SELECT DISTINCT 'https://host' || doc_id % {n} || '.example/new/'
+               || doc_id % {n}
+      FROM documents WHERE (doc_id % {n}) % 10 <> 0
     ),
     cand AS (
       SELECT DISTINCT url FROM (
@@ -7939,7 +7937,7 @@ def q_crawl_scheduler_sql() -> str:
     frontier AS (
       SELECT url FROM cand
       WHERE url NOT IN (
-        SELECT 'https://host' || doc_id % 50 || '.example/doc/' || doc_id
+        SELECT {_doc_url_sql()}
         FROM documents)
     ),
     parts AS (
@@ -7951,7 +7949,7 @@ def q_crawl_scheduler_sql() -> str:
                AS path
       FROM frontier
     ),
-    r_hosts AS (SELECT DISTINCT doc_id % 50 AS h FROM documents),
+    r_hosts AS (SELECT DISTINCT doc_id % {n} AS h FROM documents),
     r_eligible AS (SELECT h FROM r_hosts WHERE h % 7 <> 3),
     r_rules AS (
       SELECT 'host' || h || '.example' AS host, FALSE AS allow,
@@ -8006,8 +8004,9 @@ def q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_robots_sitemaps_sql() -> str:
-    return """
-    WITH hosts AS (SELECT DISTINCT doc_id % 50 AS h FROM documents)
+    n = _link_hosts()
+    return f"""
+    WITH hosts AS (SELECT DISTINCT doc_id % {n} AS h FROM documents)
     SELECT 'host' || h || '.example' AS host,
            'https://host' || h || '.example/sitemap.xml' AS sitemap_url
     FROM hosts
@@ -8246,11 +8245,7 @@ def _frontier_bloom_words(spark: SparkSession, sf_dir: str) -> list:
     decontamination filter."""
     def build():
         crawled = _tbl(spark, sf_dir, "documents").select(
-            F.md5(F.concat(
-                F.lit("https://host"),
-                (F.col("doc_id") % 50).cast("string"),
-                F.lit(".example/doc/"),
-                F.col("doc_id").cast("string"))).alias("g"))
+            F.md5(_doc_url_col()).alias("g"))
         return _pack_bloom_words(crawled)
 
     return _stamped_value(_BLOOM_CACHE, spark, "frontier_bloom", sf_dir,
@@ -8278,18 +8273,8 @@ def q_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _linked_pages(spark, sf_dir)
     cand = (_outlink_table(spark, sf_dir)
             .select(F.col("dst_url").alias("url")).distinct())
-    bloom = F.array(*[F.lit(w)
-                      for w in _frontier_bloom_words(spark, sf_dir)])
-    checks = [
-        F.call_function(
-            "shiftrightunsigned",
-            F.element_at(bloom, (p.cast("int") / 64).cast("int") + 1),
-            (p % 64).cast("int")).bitwiseAND(F.lit(1)) == 1
-        for p in _bloom_positions(F.md5(F.col("url")))
-    ]
-    maybe = checks[0]
-    for c in checks[1:]:
-        maybe = maybe & c
+    maybe = _bloom_probe(_frontier_bloom_words(spark, sf_dir),
+                         F.md5(F.col("url")))
     return (cand
             .withColumn("maybe_crawled", maybe)
             .join(pages.select("url")
@@ -8310,7 +8295,7 @@ def q_frontier_bloom_sql() -> str:
     WITH {_link_edge_sql()},
     cand AS (SELECT DISTINCT dst_url AS url FROM link_rows),
     crawled AS (
-      SELECT 'https://host' || doc_id % 50 || '.example/doc/' || doc_id
+      SELECT {_doc_url_sql()}
                AS url
       FROM documents
     ),

@@ -268,7 +268,11 @@ def _commit_manifest(spark: SparkSession, output_path: str,
 
 
 def committed_manifests(spark: SparkSession, output_path: str) -> DataFrame:
-    files = _manifest_files(spark, output_path)
+    return _read_manifests(spark, _manifest_files(spark, output_path))
+
+
+def _read_manifests(spark: SparkSession, files: list[str]) -> DataFrame:
+    """The rows of the (already footer-validated) manifest ``files``."""
     if not files:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
     df = spark.read.option("mergeSchema", "true").parquet(*files)
@@ -302,10 +306,11 @@ def pending_input_files(spark: SparkSession, input_path: str,
     exist yet the check is pure-Python — no Spark job on the fresh-start
     path."""
     all_files = list_input_files(input_path, spark)
-    if not _manifest_files(spark, output_path):
+    manifests = _manifest_files(spark, output_path)   # one read each
+    if not manifests:
         return all_files
     committed = (
-        committed_manifests(spark, output_path)
+        _read_manifests(spark, manifests)
         .select("input_file", "day_range").distinct().collect()
     )
     want = _range_str(day_range)

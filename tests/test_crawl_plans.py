@@ -113,3 +113,23 @@ def test_decon_fuzzy_broadcast_only_cross(spark):
     # would be the corpus x corpus mistake
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_crawl_oracles_follow_link_hosts(monkeypatch):
+    """Every crawl fixture reads linkgraph.LINK_HOSTS when its query is
+    built: with 7 hosts no registered oracle keeps the old literal 50."""
+    import os
+    import sys
+
+    from ocr_hardsubx_spark.operators import linkgraph
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(linkgraph, "LINK_HOSTS", 7)
+    sqls = entry.oracle_sql()
+    assert not [name for name, sql in sqls.items() if "% 50" in sql]
+    for name in ("q_meta_robots", "q_crawl_scheduler", "q_frontier_bloom",
+                 "q_robots_rules", "q_sitemap_urls", "q_http_gate"):
+        assert "doc_id % 7 " in sqls[name], name

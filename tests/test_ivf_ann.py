@@ -112,7 +112,7 @@ def test_lloyd_training_improves_the_quantizer(spark):
             .max(axis=1).mean()
 
     seed = dq._ivf_centroids(spark, SF)
-    trained = dq.ivf_lloyd(spark, SF, iters=2)
+    trained = dq.ivf_lloyd(spark, SF)
     assert objective(trained) > objective(seed)
     for c in trained:                       # means re-normalized
         assert abs(np.linalg.norm(c) - 1.0) < 1e-9
@@ -402,7 +402,7 @@ def test_pq_lloyd_reduces_reconstruction_error(spark):
         return (err / dq.EMB_DIM).mean()
 
     seed = dq._pq_codebook(spark, SF)
-    trained = dq.pq_lloyd(spark, SF, iters=2)
+    trained = dq.pq_lloyd(spark, SF)
     assert mse(trained) < mse(seed)
 
 

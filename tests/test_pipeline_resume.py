@@ -684,3 +684,28 @@ def test_lease_heartbeat_outlives_ttl_and_release_restores_foreign(
         assert json.load(f)["owner"] == thief
     _release_compaction_lease(spark, out, thief)
     assert not os.path.exists(lease)
+
+
+def test_pending_reads_each_manifest_once(spark, corpus, tmp_path,
+                                          monkeypatch):
+    """Resume planning footer-reads each committed manifest once: with K
+    committed runs, pending_input_files makes K store reads, not 2K."""
+    import pyarrow as pa
+
+    from ocr_hardsubx_spark.plans import pipeline
+
+    out = str(tmp_path / "out")
+    files = list_input_files(corpus)
+    k = 3
+    for i in range(k):
+        pipeline._commit_manifest(spark, out, f"run{i}", pa.Table.from_pylist(
+            [{"run_id": f"run{i}", "input_file": files[i], "rows": 1,
+              "bytes_out": -1, "run_bytes_out": 1, "n_partitions": 1,
+              "wall_ms": 1, "day_range": ""}]))
+    reads = []
+    stock = pipeline._LocalStore.read
+    monkeypatch.setattr(pipeline._LocalStore, "read",
+                        lambda self, p: reads.append(p) or stock(self, p))
+    pending = pending_input_files(spark, corpus, out)
+    assert len(pending) == len(files) - k
+    assert len(reads) == k, reads
